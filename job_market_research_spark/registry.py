@@ -22,6 +22,11 @@ Float-exactness policy (critical for hash matching):
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -54,44 +59,87 @@ def query(
     return deco
 
 
-#: Module edits within this slack of the evidence file's mtime do NOT
-#: mark evidence stale: the driver re-checks-out the repo each round,
-#: which stamps every module a few ms after every CORRECTNESS file —
-#: without the slack a fresh checkout makes ALL evidence look stale.
-_STALENESS_SLACK_S = 300.0
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+#: Written by scripts/plan_census.py: {name: {"fp": hex, "changed_in":
+#: round}}. `changed_in` is the round a query's fingerprint last changed.
+FINGERPRINTS_PATH = os.path.join(_ROOT, "FINGERPRINTS.json")
+
+#: Testdata scale the fingerprints are taken at: builders that collect
+#: data-derived constants embed them in the plan, so each scale
+#: fingerprints differently.
+FINGERPRINT_SCALE = "sf0.001"
+
+#: Plan-text noise that differs between runs of an unchanged query.
+_PLAN_NOISE = (
+    (re.compile(r"#\d+L?"), "#"),  # expression ids
+    (re.compile(r"plan_id=\d+"), "plan_id"),
+    (re.compile(r"uuid\(Some\(-?\d+\)\)"), "uuid(seed)"),
+    # F.transform & co. name lambda variables from a process-wide counter
+    (re.compile(r"(lambda \w+?)_\d+\b"), r"\1_"),
+    (re.compile(r"\bsink_[0-9a-f]{8}\b"), "sink_"),  # streaming memory sinks
+    (re.compile(r"<root>/\.scratch/pid\d+"), "<scratch>"),  # sources.readers
+)
 
 
-def _driver_green_evidence() -> dict[str, tuple[int, float]]:
-    """Query names with a fully-green driver CORRECTNESS row in any
-    prior round (CORRECTNESS_r*.json at the repo root), mapped to
-    (newest proving ROUND, that file's mtime).
+def plan_fingerprint(df: DataFrame, oracle: str | None, sf_dir: str) -> str:
+    """Hash of a query's oracle SQL plus its analyzed logical plan text,
+    with the dataset path, the repo root and `_PLAN_NOISE` replaced by
+    placeholders.
 
-    The driver's correctness pass covers a bounded window of the
-    registry in iteration order, so `load_all` fronts queries that have
-    no green evidence yet — each round the window rotates onto unproven
-    queries until every operator has a hard driver-side row.
+    The analyzed plan is the query as its code wrote it. The optimized
+    plan is not stable enough: once a staged frame exists, Spark's cache
+    substitutes it into other queries' optimized plans, and after it
+    executes its reprint changes form, so the same query would
+    fingerprint differently in a fresh census and late in a test run.
+    The text is printed untruncated: by default Spark elides fields and
+    literal-array elements past the 25th, and an edit there would go
+    unseen."""
+    conf, key = df.sparkSession.conf, "spark.sql.debug.maxToStringFields"
+    limit = conf.get(key)
+    conf.set(key, str(2**31 - 1))
+    try:
+        text = df._jdf.queryExecution().analyzed().toString()
+    finally:
+        conf.set(key, limit)
+    sf_paths = {os.path.abspath(sf_dir), os.path.realpath(sf_dir)}
+    for path in sorted(sf_paths, key=len, reverse=True):  # longest first
+        text = text.replace(path, "<sf>")
+    text = text.replace(_ROOT, "<root>")
+    for pattern, placeholder in _PLAN_NOISE:
+        text = pattern.sub(placeholder, text)
+    return hashlib.sha256(f"{oracle or ''}\n{text}".encode()).hexdigest()[:16]
 
-    The round number comes from the FILENAME (r01, r02, …), not the
-    file mtime: a fresh checkout gives every evidence file the same
-    mtime, which would make evidence age unrankable. The mtime is kept
-    only for the module-edit staleness check.
-    """
-    import glob
-    import json
-    import os
-    import re
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: dict[str, tuple[int, float]] = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
+def load_fingerprints() -> dict[str, dict]:
+    """FINGERPRINTS.json, or {} before the first census writes it."""
+    try:
+        with open(FINGERPRINTS_PATH) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return {}
+
+
+def correctness_rounds() -> list[tuple[int, str]]:
+    """(round, path) of every driver CORRECTNESS_r*.json at the repo
+    root, oldest first. The round comes from the FILENAME: a fresh
+    checkout gives every file the same mtime."""
+    rounds = []
+    for path in glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
+        if m:
+            rounds.append((int(m.group(1)), path))
+    return sorted(rounds)
+
+
+def _driver_green_evidence() -> dict[str, int]:
+    """Query name -> newest round whose driver CORRECTNESS row is fully
+    green (no error; row count, schema and value hash all match)."""
+    green: dict[str, int] = {}
+    for rnd, path in correctness_rounds():
         try:
             with open(path) as f:
                 data = json.load(f)
-            mtime = os.path.getmtime(path)
         except Exception:
             continue
         if not isinstance(data, dict):
@@ -104,596 +152,13 @@ def _driver_green_evidence() -> dict[str, tuple[int, float]]:
                 and row.get("schema_match")
                 and row.get("hash_match")
             ):
-                if name not in green or rnd > green[name][0]:
-                    green[name] = (rnd, mtime)
+                green[name] = rnd  # rounds ascend: the newest wins
     return green
 
 
-def _module_mtime(fn: Callable) -> float:
-    """mtime of the module file that defines a registered query, or 0.0
-    when it cannot be resolved (evidence then never goes stale)."""
-    import os
-    import sys
-
-    mod = sys.modules.get(getattr(fn, "__module__", ""))
-    path = getattr(mod, "__file__", None)
-    try:
-        return os.path.getmtime(path) if path else 0.0
-    except OSError:
-        return 0.0
-
-
-#: Queries whose SEMANTICS changed after their last green round: treat
-#: as never-proven (tier 0) so they cannot be crowded out of the driver
-#: window by brand-new queries — a stale green here is WORSE than no
-#: evidence, it looks like proof of code that no longer exists.
-#: (text_skill_ner sat here for its round-3 multi-word rework; the
-#: round-3 green row proved the new semantics, so the pin is lifted —
-#: module-mtime staleness re-fronts it automatically after any edit.)
-#: Standing rule (ADVICE r12 item 3): the round's plan-changed queries
-#: must appear in the SAME round's driver correctness slice, not only
-#: in local parity runs — list them here for one round, then remove
-#: once the green row lands (the r13 four — rocchio, containment,
-#: winnowing, naive-bayes — all got their r13 rows and are lifted).
-#: Round 14 listed its 11 plan/value-changed queries here; all 11 got
-#: green r14 rows (CORRECTNESS_r14.json) so those pins are lifted —
-#: tier 1's oldest-round-first rotation fronts the r5 cohort per the
-#: r14 verdict's item 2 (the two r15 pins below still leave all 36
-#: r5-stamped queries inside the 50-slot window: 2 + 36 + 12 of r6).
-#: Round 15 pinned its three plan/oracle-text-changed queries
-#: (ml_logreg_newton, ml_naive_bayes_lang, join_spatial_grid); all
-#: three got green r15 rows (CORRECTNESS_r15.json) so the pins are
-#: lifted per the standing rule — the r16 window spends all 50 slots
-#: on tier 1's oldest-round-first rotation (drains the r6 cohort,
-#: VERDICT r15 item 2). Round 16 emptied this set on the theory that
-#: module-mtime staleness would re-front its touched queries — but the
-#: driver's fresh checkout re-stamps every mtime (see
-#: _STALENESS_SLACK_S above), so nothing re-fronted automatically and
-#: most r16 expression/plan-changed queries got no fresh driver row
-#: (VERDICT r16 item 1). Round 17 re-pins them per the standing
-#: r12/r15 rule: the r16-changed heads below (join_salted_skew is the
-#: round's one plan-shape change, BHJ→SHJ; the aggregate rewrites are
-#: represented by their named heads; dedup_minhash_lsh fronts the
-#: 14-query shingle family of r16 change 1), plus r17's own touched
-#: queries as they land. Lift each pin once its green CORRECTNESS_r17
-#: row exists.
-FORCE_REPROVE: frozenset[str] = frozenset(
-    {
-        # r16 changes without an r16 driver row (VERDICT r16 item 1)
-        "join_salted_skew",
-        "agg_pricing_summary",
-        "join_star_wide",
-        "agg_revenue_forecast",
-        "agg_market_share",
-        "agg_promo_revenue_share",
-        "text_decontaminate",
-        "dedup_minhash_lsh",
-        # r17 expression-level changes (scaled-long limb sums; values
-        # bit-identical by construction and locally re-proven, pinned
-        # for a driver row per the same standing rule)
-        "ml_ols_multivariate",
-        "ml_logreg_newton",
-        "agg_welch_ttest",
-        "agg_cuped_adjustment",
-        "agg_price_index_fisher",
-        "agg_anova_twoway",
-    }
-)
-
-#: Explicit front-of-window order for driver-unproven queries. Round 2:
-#: the 7 round-1 red rows first (proving the session/typing fixes), then
-#: every remaining SURVEY §2 ID with no driver row (sinks last of the
-#: batch, streaming + ml + multimodal rotate into the next round).
-UNPROVEN_PRIORITY: tuple[str, ...] = (
-    # ---- round-12 note: the registry is 465 queries, all with a green
-    # newest driver row (the two r11 *_probe diagnostics were deleted
-    # per their own docstrings once their originals went green —
-    # VERDICT r11 item 2). Tier 0 is EMPTY, so every driver slot falls
-    # through to tier 1's oldest-proving-round-first rotation: the r12
-    # window re-stamps the r2-stamped cohorts (scalars, nested, sinks,
-    # setops) per VERDICT r11 item 7 — no head pinning needed; the
-    # evidence_order rule does it mechanically.
-    # ---- round-11 head (historical; names may repeat below; FIRST
-    # position wins). The r10 verdict: the two perennially driver-red
-    # DECIMAL emitters first (retyped to DOUBLE emission that round).
-    "window_holt_linear",
-    "window_max_drawdown",
-    "multimodal_webp_meta",
-    "graph_reciprocity",
-    "text_confusable_scripts",
-    "privacy_t_closeness",
-    "maintenance_vacuum_orphans",
-    "ml_cohort_did",
-    "window_hurst_exponent",
-    "graph_rich_club",
-    # ---- end round-11 head ----
-    # ---- round-9 head (names may repeat below; FIRST position wins).
-    # The r8 verdict: freeze new-operator additions and spend the r9
-    # driver window on EXACTLY the 50 highest-priority names from the
-    # 72 never-driver-stamped pool (all judge-verified green at sf0.01
-    # in the r8 session). This is the registration-order window the r8
-    # judge reviewed, pinned explicitly so the one permitted r9
-    # addition (multimodal_mp4_meta, verdict item 6 — listed at the
-    # END of this head) cannot jump the queue; the remaining 22 names
-    # follow and fill the r10 window, after which tier 0 is empty and
-    # the rotation starts the §2 freshness backfill (verdict item 4).
-    "dedup_soft_downweight",
-    "dedup_lsh_recall_audit",
-    "project_unpivot_metrics",
-    "agg_local_day_buckets",
-    "agg_autocorr_lags",
-    "window_holt_linear",
-    "window_max_drawdown",
-    "window_variance_ratio",
-    "window_forecast_skill",
-    "window_ljung_box",
-    "stat_runs_test",
-    "ml_chow_test",
-    "window_yoy_growth",
-    "window_kpss_test",
-    "window_control_chart",
-    "window_forecast_combination",
-    "scan_parquet_bloom",
-    "scan_struct_pruning",
-    "window_concurrency_sweep",
-    "join_spatial_grid",
-    "maintenance_compaction_plan",
-    "mv_join_delta",
-    "privacy_dp_mean_release",
-    "monitor_psi_stability",
-    "monitor_adversarial_auc",
-    "profile_ref_integrity",
-    "monitor_emd_wasserstein",
-    "profile_pk_uniqueness",
-    "join_asof_nearest",
-    "text_tokenizer_coverage",
-    "grouped_pandas_periodogram",
-    "text_code_prose_classifier",
-    "fn_luhn_check",
-    "sink_dynamic_partition_overwrite",
-    "dedup_paragraph_exact",
-    "ml_eval_pass_at_k",
-    "ml_eval_majority_vote",
-    "ml_eval_rouge2_overlap",
-    "ml_eval_bleu2",
-    "ml_eval_length_bias",
-    "agg_cohens_kappa",
-    "ml_lift_table",
-    "ml_eval_auc_roc",
-    "ml_eval_brier_decomposition",
-    "ml_eval_pr_auc",
-    "ml_eval_krippendorff_alpha",
-    "ml_eval_mcnemar",
-    "ml_threshold_cost_min",
-    "ml_bandit_ucb1",
-    "ml_eval_slice_accuracy",
-    # ---- end of the 50-slot r9 window; the 22 below fill r10 ----
-    "ml_eval_auc_delong_ci",
-    "graph_assortativity",
-    "graph_clustering_coeff",
-    "graph_personalized_pagerank",
-    "ir_query_likelihood",
-    "text_vocab_jsd",
-    "text_bigram_entropy_rate",
-    "agg_good_turing_unseen",
-    "ir_bm25f_fielded",
-    "sample_preference_pairs",
-    "sample_ess_diagnostics",
-    "ml_target_encoding_oof",
-    "ml_leakage_audit",
-    "embed_anisotropy",
-    "multimodal_jpeg_meta",
-    "multimodal_png_meta",
-    "multimodal_exif_meta",
-    "multimodal_gif_meta",
-    "multimodal_bmp_meta",
-    "multimodal_riff_chunks",
-    "multimodal_id3_meta",
-    "multimodal_flac_meta",
-    "multimodal_mp4_meta",
-    # ---- end round-9 head ----
-    # ---- round-7 window head (names may repeat below; FIRST position
-    # wins). The r6 verdict's tasks 2+7: the judge-weighted stragglers
-    # first (the only ANN query with no driver row, the last unproven
-    # streaming sketch, the privacy-release family, the 7 text ops
-    # still carrying pytest-only evidence), then scans/sinks, samplers,
-    # graph, asof joins, window/timeseries and bounded-ML fits to fill
-    # the 50-slot window. The 22 homogeneous experimentation-stats
-    # aggregates defer to the r8 window, draining the backlog to zero.
-    "ann_dim_truncation_recall",
-    "stream_welch_monitor",
-    "privacy_dp_count_release",
-    "privacy_dp_median",
-    "privacy_dp_vocab_release",
-    "privacy_randomized_response",
-    "text_bpe_train_merges",
-    "text_bpe_encode",
-    "text_bigram_lm_kn",
-    "text_ccnet_buckets",
-    "text_chat_format_validate",
-    "text_readability_scores",
-    "text_tokenizer_fertility",
-    "scan_manifest_time_travel",
-    "scan_binaryfile_source",
-    "sink_csv_escape_roundtrip",
-    "scan_hive_partition_types",
-    "sample_dsir_importance",
-    "sample_gumbel_weighted",
-    "sample_coreset_sensitivity",
-    "sample_hard_negatives",
-    "sample_balanced_classes",
-    "sample_priority_subset_sum",
-    "sample_neyman_allocation",
-    "graph_bfs_hops",
-    "graph_link_prediction",
-    "graph_hits",
-    "graph_modularity_score",
-    "profile_degree_powerlaw",
-    "join_asof_tolerance",
-    "join_asof_forward",
-    "privacy_pseudonymize_join",
-    "window_cusum_change",
-    "window_downsample_lttb",
-    "window_peak_detect",
-    "window_ewma_bounded",
-    "window_changepoint_detect",
-    "window_anomaly_mad",
-    "window_seasonal_decompose",
-    "window_winsorize_trim",
-    "ml_ols_multivariate",
-    "ml_threshold_tune_f1",
-    "ml_gbdt_stumps_regression",
-    "ml_isotonic_calibration",
-    "ml_bradley_terry_strength",
-    "ml_record_linkage_fs",
-    "ml_conformal_prediction",
-    "profile_benford_audit",
-    "profile_data_card",
-    "profile_json_keys",
-    # ---- end round-7 head ----
-    # ---- round-6 window head (names may repeat below; FIRST position
-    # wins). The r5 verdict front-loads the judge-weighted first-class
-    # scale operators with zero driver rows — the two repaired
-    # contract-oracle sketches, the interval join, the streaming
-    # sketch family, the round-5 dedup wave, then the heavy stats/ML
-    # fits — so CORRECTNESS_r06's 50-row window proves the strongest
-    # designs first.
-    "agg_sketch_prod",
-    "agg_hll_partitioned_merge",
-    "join_interval_overlap",
-    "stream_cms_topk",
-    "stream_kmv_distinct",
-    "stream_histogram_quantile",
-    "agg_mutual_information",
-    "dedup_incremental_minhash",
-    "dedup_cdc_chunking",
-    "dedup_winnowing",
-    "dedup_excise_spans",
-    "dedup_best_of_cluster",
-    "dedup_containment",
-    "agg_kmv_audience_sketch",
-    "agg_cms_heavy_hitters",
-    "ann_mips_topk",
-    "ann_filtered_topk",
-    "multimodal_scene_cut",
-    "multimodal_audio_vad",
-    "multimodal_audio_fingerprint",
-    "stat_poisson_bootstrap_ci",
-    "ml_adaboost_stumps",
-    "ml_logreg_newton",
-    "ml_gmm_em",
-    "stat_ks_two_sample",
-    "ir_hybrid_rrf",
-    "ir_rocchio_prf",
-    "pipeline_rag_index_e2e",
-    "pipeline_curation_e2e",
-    # ---- end round-6 head; historical order follows ----
-    # semantics changed in round 3 → must re-prove ahead of any
-    # cosmetically-stale green (position here orders tier 1 too)
-    "text_skill_ner",
-    # round-1 red rows — fixed this round, must re-enter the window
-    "filter_temporal_range",
-    "agg_grouping_sets",
-    "filter_schema_validate",
-    "agg_case_when_flag",
-    "join_star_wide",
-    "agg_pivot",
-    "agg_approx_count_distinct",
-    # §2.3 dedup / §2.4 joins / §2.9 nested — zero driver evidence
-    "dedup_secondary_date",
-    "dedup_skill_set",
-    "dedup_bridge_conflict",
-    "join_lookup_upsert",
-    "join_positional_zip",
-    "join_key_fallback",
-    "join_semi_probe",
-    "nested_flatten_skills",
-    "nested_explode_skills",
-    "nested_first_element",
-    "nested_struct_access",
-    "nested_collect_skills",
-    # §2.7 set ops + §2.5 remaining aggregates
-    "set_union_all",
-    "source_append_merge",
-    "agg_total_offers",
-    "agg_insert_counters",
-    "agg_word_freq",
-    # §2.8 scalar functions (all 16)
-    "fn_split_csv",
-    "fn_trim_cast",
-    "fn_lower_norm",
-    "fn_date_multiformat",
-    "fn_relative_date",
-    "fn_calendar_attrs",
-    "fn_calendar_range",
-    "fn_default_date",
-    "fn_length",
-    "fn_case_when",
-    "fn_concat_text",
-    "fn_regex_segment",
-    "fn_json_extract",
-    "fn_uuid_name",
-    "fn_source_from_filename",
-    "fn_qualification_int",
-    # §2.10 text
-    "text_token_dist",
-    "text_llm_enrich",
-    # §2.1 sinks
-    "sink_json_single",
-    "sink_json_overwrite",
-    "sink_object_store",
-    "sink_excel_by_date",
-    "sink_jdbc_star",
-    "agg_group_export",
-    "sink_mongo",
-    # ---- next window (round 3+): streaming §2.11, then beyond-§2 ----
-    "stream_window_tumbling",
-    "stream_window_sliding",
-    "stream_dedup_watermark",
-    "stream_incremental_pipeline",
-    "stream_static_join",
-    "stream_stream_join",
-    "stream_sessionize",
-    "stream_stateful_counter",
-    "join_asof",
-    "join_range",
-    "agg_salted_skew",
-    "join_salted_skew",
-    "grouped_minmax_native",
-    "grouped_pandas_ewma",
-    "dedup_exact_hash",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "dedup_fuzzy_levenshtein",
-    "dedup_cluster_cc",
-    "text_lang_id",
-    "text_quality_score",
-    "text_token_count",
-    "text_fingerprint",
-    "text_tfidf",
-    "text_pii_redact",
-    "sample_train_test_split",
-    "sample_stratified",
-    "ann_cosine_topk",
-    "ann_ivf_topk",
-    "ann_lsh_bucketed",
-    "ann_batch_topk",
-    "multimodal_binary_meta",
-    "multimodal_decode_stub",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "multimodal_embed_extract",
-    # round-2 late additions — explicit for deterministic window order
-    "merge_scd2",
-    "agg_sessionize_batch",
-    "maintenance_compact_small_files",
-    "text_lm_perplexity",
-    "multimodal_decode_real",
-    "multimodal_resize_real",
-    "multimodal_audio_real",
-    # round-3 additions: the second star variant + harmonization,
-    # then the training-data curation family
-    "star2_dim_location",
-    "star2_fact_offer",
-    "star2_harmonize_dims",
-    "text_decontaminate",
-    "sample_mixture_weighted",
-    "pack_sequences",
-    "sample_mixture_upsample",
-    "dedup_url_canonical",
-    "maintenance_zorder_cluster",
-    "fn_llm_json_fence",
-    "fn_payload_prepare",
-    "ml_kmeans_lite",
-    "text_quality_model",
-    "ann_index_build",
-    "text_strip_boilerplate",
-    "text_repetition_signals",
-    "dedup_semantic_semdedup",
-    "agg_sketch_bounds",
-    "graph_pagerank_lite",
-    "scan_csv_permissive",
-    "scan_orc_roundtrip",
-    "text_chunk_overlap",
-    "text_normalize_unicode",
-    "filter_term_blocklist",
-    "merge_cdc_feed",
-    "sample_reservoir_fixed_k",
-    # round-4 additions: quality gates, runtime filters, vector ops,
-    # corpus preparation, null-safe join, equal-frequency bucketing
-    "validate_expectations",
-    "cdc_snapshot_diff",
-    "join_bloom_prune",
-    "ann_quantize_int8",
-    "embed_mean_pool",
-    "text_html_strip",
-    "dedup_span_ngram",
-    "join_null_safe",
-    "window_ntile_bucket",
-    # round-4 second batch: event analytics + outlier/privacy gates
-    "agg_funnel_conversion",
-    "agg_retention_cohort",
-    "window_first_last_touch",
-    "filter_outlier_iqr",
-    "privacy_k_anonymity",
-    "sample_temperature_mixture",
-    "window_activity_streak",
-    "monitor_feature_drift",
-    "agg_duplication_profile",
-    "text_sentence_stats",
-    # round-5 additions
-    "agg_sketch_prod",
-    "ann_knn_join",
-    "stream_cdc_apply",
-    "text_bm25_topk",
-    "text_bpe_pair_counts",
-    "graph_triangle_count",
-    "window_zscore_anomaly",
-    "ann_rp_rerank",
-    "text_pmi_collocations",
-    "graph_label_propagation",
-    "mv_incremental_refresh",
-    "sample_curriculum_order",
-    "agg_sliding_distinct_users",
-    "agg_event_transitions",
-    "profile_column_entropy",
-    "sample_time_series_cv",
-    "ann_pq_topk",
-    "graph_kcore_peel",
-    "multimodal_phash_cluster",
-    "window_rolling_median",
-    "agg_value_histogram",
-    "agg_interarrival_stats",
-    "privacy_l_diversity",
-    "ml_ols_closed_form",
-    "window_skyline_pareto",
-    # round-5 third wave (this session) — interleaved here so the r5
-    # driver window (first 50 unproven) proves BOTH waves: the full
-    # benchmark-classic surface first, then the flagship new families;
-    # everything below rotates into r6+ windows.
-    "join_shipping_priority",
-    "join_local_supplier_volume",
-    "agg_revenue_forecast",
-    "topk_returned_customers",
-    "topk_large_volume_orders",
-    "join_disjunctive_pred",
-    "agg_order_priority_semi",
-    "agg_orders_per_customer_hist",
-    "agg_promo_revenue_share",
-    "agg_nation_trade_volume",
-    "agg_market_share",
-    "topk_supplier_revenue",
-    "agg_small_qty_revenue",
-    "agg_priority_lateness",
-    "filter_inactive_customers",
-    "join_waiting_orders",
-    "agg_product_type_profit",
-    "agg_supplier_part_count",
-    "agg_bitmap_distinct_users",
-    "stream_bitmap_distinct",
-    "maintenance_manifest_prune",
-    "text_gopher_filters",
-    "text_watermark_detect",
-    "ml_eval_retrieval_ndcg",
-    "agg_theil_sen_trend",
-    "scan_schema_evolution",
-    "agg_audience_overlap",
-    "multimodal_audio_fingerprint",
-    "agg_gini_concentration",
-    "ml_naive_bayes_lang",
-    "join_scd2_pointintime",
-    "agg_rfm_segmentation",
-    "agg_basket_affinity",
-    "agg_time_weighted_avg",
-    "agg_ohlc_bars",
-    "window_cumulative_distinct",
-    "agg_seasonal_anomaly",
-    "ml_pca_power_iteration",
-    "sample_fps_diversity",
-    "ml_knn_classify",
-    "text_keywords_topk",
-    "agg_pareto_coverage",
-    "window_gap_fill_interpolate",
-    "dedup_containment",
-    "ml_eval_confusion",
-    "ml_calibration_bins",
-    "profile_fd_violations",
-    "text_ngram_novelty",
-    "window_cusum_change",
-    "graph_bfs_hops",
-    "agg_funnel_windowed",
-    "privacy_pseudonymize_join",
-    "window_downsample_lttb",
-    "ml_ols_multivariate",
-    "join_asof_tolerance",
-    "window_peak_detect",
-    "agg_cohort_ltv",
-    "pipeline_curation_e2e",
-    "text_bpe_train_merges",
-    # round-5 second wave (this session): strongest first — dedup/
-    # selection/sketch operators the judge weighs as first-class
-    "dedup_incremental_minhash",
-    "dedup_cdc_chunking",
-    "sample_dsir_importance",
-    "sample_gumbel_weighted",
-    "sample_coreset_sensitivity",
-    "sample_hard_negatives",
-    "agg_kmv_audience_sketch",
-    "stream_kmv_distinct",
-    "agg_cms_heavy_hitters",
-    "ir_hybrid_rrf",
-    "ann_mips_topk",
-    "ann_filtered_topk",
-    "text_bpe_encode",
-    "text_bigram_lm_kn",
-    "graph_link_prediction",
-    "graph_hits",
-    "mixture_token_budget",
-    "agg_shapley_attribution",
-    "window_ewma_bounded",
-    "join_asof_forward",
-    "multimodal_scene_cut",
-    "privacy_dp_count_release",
-    "profile_benford_audit",
-    "profile_data_card",
-    "dedup_winnowing",
-    "monitor_rate_shift",
-    "sample_balanced_classes",
-    "pipeline_rag_index_e2e",
-    "agg_user_path_topk",
-    "agg_kaplan_meier",
-    "stat_poisson_bootstrap_ci",
-    "agg_markov_stationary",
-    "ml_adaboost_stumps",
-    "ml_threshold_tune_f1",
-    "window_changepoint_detect",
-    "text_tokenizer_fertility",
-    # round-5 fourth wave: span excision + bounded-iteration fits
-    "dedup_excise_spans",
-    "ml_logreg_newton",
-    "stat_ks_two_sample",
-    "dedup_best_of_cluster",
-    "agg_hill_tail_index",
-    "stream_cms_topk",
-    "privacy_dp_median",
-    "scan_manifest_time_travel",
-    "privacy_randomized_response",
-    "ir_rocchio_prf",
-    "ml_gmm_em",
-    "text_readability_scores",
-    "sample_priority_subset_sum",
-    "multimodal_audio_vad",
-    "join_interval_overlap",
-    "stream_histogram_quantile",
-    "agg_mutual_information",
-)
-
-
 def load_all() -> dict[str, QuerySpec]:
-    """Import every query-defining module, then return the registry
-    ordered so driver-unproven queries iterate first."""
+    """Import every query-defining module, then return the registry in
+    the driver's proof-window order (`evidence_order`)."""
     # Imports are for the registration side effects.
     from job_market_research_spark.plans import (  # noqa: F401
         analytics,
@@ -752,59 +217,33 @@ def load_all() -> dict[str, QuerySpec]:
     from job_market_research_spark.multimodal import binary_ops, real_media  # noqa: F401
     from job_market_research_spark.streaming import bitmaps, sessions, windows  # noqa: F401
 
+    changed_in = {n: e["changed_in"] for n, e in load_fingerprints().items()}
     return {
         name: REGISTRY[name]
-        for name in evidence_order(
-            list(REGISTRY),
-            green=_driver_green_evidence(),
-            mtime_of={n: _module_mtime(REGISTRY[n].fn) for n in REGISTRY},
-        )
+        for name in evidence_order(list(REGISTRY), _driver_green_evidence(), changed_in)
     }
 
 
 def evidence_order(
-    names: list[str],
-    green: dict[str, tuple[int, float]],
-    mtime_of: dict[str, float],
+    names: list[str], green: dict[str, int], changed_in: dict[str, int]
 ) -> list[str]:
-    """Pure ordering rule behind `load_all` (unit-tested with synthetic
-    evidence in tests/test_registry_rotation.py):
+    """The driver proves a bounded prefix of the registry order (its
+    first ~50 names) against the DuckDB oracles each round, so this
+    order is the proof schedule:
 
-    Tier 0: never driver-green (or semantics force-reproven) — ordered
-    by UNPROVEN_PRIORITY (first occurrence wins), unlisted names after.
-    Tier 1: green — ordered OLDEST PROVING ROUND FIRST so queries whose
-    newest green row is rounds old rotate back into the driver's
-    bounded window (round-4 verdict: §2 queries coasting on r2 proof
-    re-enter once tier 0 drains; round-7 verdict made evidence AGE the
-    primary freshness bar). Within the same proving round, names whose
-    defining module was edited more than _STALENESS_SLACK_S after the
-    proving file was written sort first (stale-on-edit; the slack
-    absorbs the uniform re-stamp a fresh checkout applies to every
-    file). Staleness is a tiebreak, not a tier: every registered query
-    is already re-proven against its DuckDB oracle on every local
-    pytest run (tests/test_oracle_parity.py), so an edit cannot silently
-    break a green query — letting module-granularity mtime churn
-    outrank genuinely old evidence only starves the rotation."""
-    reg_pos = {name: i for i, name in enumerate(names)}
-    # First occurrence wins: the round-6 head re-lists names that also
-    # appear in the historical order below it — the head position must
-    # be the effective one.
-    prio: dict[str, int] = {}
-    for i, name in enumerate(UNPROVEN_PRIORITY):
-        prio.setdefault(name, i)
+    Tier 0 first: queries with no green driver row (`green`: name ->
+    newest green round), or whose fingerprint changed in a round later
+    than that row (`changed_in`: name -> round, from FINGERPRINTS.json).
+    Tier 1 next: every other query, oldest proving round first.
+    Ties keep the order of `names` (registry order)."""
 
-    def key(name: str) -> tuple[int, float, int, int]:
-        if name not in green or name in FORCE_REPROVE:
-            # Sentinel base is the RAW list length (not the deduped
-            # `prio` size): head/tail duplicates make first-occurrence
-            # indices reach past len(prio), so a len(prio)-based
-            # sentinel would let unlisted names sort ahead of listed
-            # ones with large first-occurrence indices.
-            return (0, 0.0, 0, prio.get(name, len(UNPROVEN_PRIORITY) + reg_pos[name]))
-        edited = mtime_of.get(name, 0.0) > green[name][1] + _STALENESS_SLACK_S
-        return (1, float(green[name][0]), 0 if edited else 1, reg_pos[name])
+    def key(name: str) -> tuple[int, int]:
+        rnd = green.get(name)
+        if rnd is None or changed_in.get(name, 0) > rnd:
+            return (0, 0)
+        return (1, rnd)
 
-    return sorted(names, key=key)
+    return sorted(names, key=key)  # stable sort: ties keep registry order
 
 
 def spark_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

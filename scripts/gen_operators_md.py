@@ -26,12 +26,12 @@ def main() -> None:
         module = spec.fn.__module__.replace("job_market_research_spark.", "")
         first_line = (spec.doc or "").strip().splitlines()
         summary = first_line[0].rstrip() if first_line else ""
-        proof = f"r{green[name][0]}" if name in green else "unproven"
+        proof = f"r{green[name]}" if name in green else "unproven"
         by_module[module].append((name, summary, spec.oracle is not None, proof))
 
-    rounds = sorted({green[n][0] for n in specs if n in green})
+    rounds = sorted({green[n] for n in specs if n in green})
     hist = ", ".join(
-        f"r{r}: {sum(1 for n in specs if n in green and green[n][0] == r)}"
+        f"r{r}: {sum(1 for n in specs if green.get(n) == r)}"
         for r in rounds
     )
     unproven = sum(1 for n in specs if n not in green)

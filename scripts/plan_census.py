@@ -11,11 +11,19 @@ and the Python boundary (Arrow-batched only — BatchEvalPython is
 banned by tests/test_plan_hygiene.py; this census records the same
 facts as data instead of assertions).
 
+At the sf0.001 default it also rewrites FINGERPRINTS.json, one
+`registry.plan_fingerprint` per query. A query whose fingerprint
+differs from the committed one gets `changed_in` = newest
+CORRECTNESS_r* round + 1, which puts it at the head of the driver's
+proof window (`registry.evidence_order`) until a newer green driver
+row lands; unchanged queries keep their `changed_in`.
+
 Run from the repo root: python scripts/plan_census.py [sf_dir]
 """
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import sys
@@ -243,14 +251,49 @@ def summarize(plan: str) -> dict:
     }
 
 
+def write_fingerprints(fps: dict[str, str], errored: list[str]) -> list[str]:
+    """Rewrite FINGERPRINTS.json from this census's fingerprints and
+    return the names whose fingerprint changed. Queries that failed to
+    build keep their committed entry; the first write (no file yet)
+    stamps every query `changed_in` 0."""
+    from job_market_research_spark.registry import (
+        FINGERPRINTS_PATH,
+        correctness_rounds,
+        load_fingerprints,
+    )
+
+    old = load_fingerprints()
+    next_round = max((r for r, _ in correctness_rounds()), default=0) + 1
+    entries = {n: old[n] for n in errored if n in old}
+    for name, fp in fps.items():
+        prev = old.get(name)
+        if not old:  # bootstrap: nothing to compare against
+            changed_in = 0
+        elif prev and prev["fp"] == fp:
+            changed_in = prev["changed_in"]
+        else:
+            changed_in = next_round
+        entries[name] = {"fp": fp, "changed_in": changed_in}
+    body = ",\n".join(
+        f" {json.dumps(n)}: {json.dumps(entries[n])}" for n in sorted(entries)
+    )
+    with open(FINGERPRINTS_PATH, "w") as f:
+        f.write("{\n" + body + "\n}\n")
+    return sorted(n for n in fps if old and old.get(n, {}).get("fp") != fps[n])
+
+
 def main() -> None:
-    from job_market_research_spark.registry import load_all
+    from job_market_research_spark.registry import (
+        FINGERPRINT_SCALE,
+        load_all,
+        plan_fingerprint,
+    )
     from job_market_research_spark.session import get_spark
 
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = get_spark(app_name="plan-census", master="local[4]", shuffle_partitions=4)
     specs = load_all()
-    rows, totals = [], Counter()
+    rows, totals, fps = [], Counter(), {}
     order = sorted(
         specs,
         key=lambda n: (
@@ -261,6 +304,7 @@ def main() -> None:
     for name in order:
         try:
             df = specs[name].fn(spark, sf)
+            fp = plan_fingerprint(df, specs[name].oracle, sf)
             plan = df._jdf.queryExecution().executedPlan().toString()
             s = summarize(plan)
         except Exception as exc:  # pragma: no cover — census must finish
@@ -274,6 +318,7 @@ def main() -> None:
         if s["python"]:
             totals["python_boundary_queries"] += 1
         rows.append((name, s, None))
+        fps[name] = fp
 
     banned = [(n, s["banned"]) for n, s, _ in rows if s and s["banned"]]
     mod_of = {
@@ -346,6 +391,9 @@ def main() -> None:
         f"wrote {out}: {len(rows)} queries, {len(banned)} banned-node "
         f"hits, {len(errored)} errored"
     )
+    if os.path.basename(os.path.normpath(sf)) == FINGERPRINT_SCALE:
+        changed = write_fingerprints(fps, [n for n, _ in errored])
+        print(f"wrote FINGERPRINTS.json: {len(changed)} changed {changed}")
     # Both failure classes exit nonzero: a census regenerated with
     # broken queries must not silently publish (ERROR rows used to ride
     # the banned==0 exit path and look like a clean run).

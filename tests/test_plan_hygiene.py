@@ -21,13 +21,20 @@ scale factor:
 
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
 
-from job_market_research_spark.registry import load_all
+from job_market_research_spark.registry import (
+    FINGERPRINT_SCALE,
+    load_all,
+    load_fingerprints,
+    plan_fingerprint,
+)
 
 SPECS = load_all()
+FINGERPRINTS = load_fingerprints()
 
 #: Global-window plans with a PROVEN bounded input. Key → the bound.
 ALLOWED_GLOBAL_WINDOW = {
@@ -293,6 +300,15 @@ def _unbounded_bnlj_builds(plan) -> list[str]:
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_no_cartesian_no_row_udf_no_global_window(spark, sf_dir, name):
     df = SPECS[name].fn(spark, sf_dir)
+    if os.path.basename(os.path.normpath(sf_dir)) == FINGERPRINT_SCALE:
+        # the committed fingerprint decides the driver's proof window:
+        # a stale one would keep an edited query out of it
+        committed = FINGERPRINTS.get(name, {}).get("fp")
+        assert plan_fingerprint(df, SPECS[name].oracle, sf_dir) == committed, (
+            f"{name}: plan or oracle changed since FINGERPRINTS.json was "
+            "written — re-run `python scripts/plan_census.py` and commit "
+            "FINGERPRINTS.json and PLANS.md"
+        )
     bad_types = {
         f.name: f.dataType.simpleString()
         for f in df.schema.fields

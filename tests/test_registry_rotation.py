@@ -1,73 +1,27 @@
-"""Unit tests for the registry's evidence-driven window ordering
+"""Unit tests for the registry's proof-window ordering
 (`evidence_order`, the pure rule behind `load_all`).
 
-The driver proves a bounded window (first ~50 names) per round, so the
-ordering IS the proof schedule: unproven first (in UNPROVEN_PRIORITY
-order, first occurrence winning), then stale-green, then green ordered
-oldest-proving-round-first so old evidence rotates back in once the
-unproven backlog drains (round-5 verdict item 4)."""
+The driver proves a bounded window (the first ~50 names) per round, so
+the ordering IS the proof schedule: tier 0 (no green driver row, or a
+fingerprint change newer than the green row) first, then tier 1 oldest
+proving round first, ties in registry order."""
 
 from __future__ import annotations
 
 from job_market_research_spark.registry import (
-    _STALENESS_SLACK_S,
-    UNPROVEN_PRIORITY,
+    REGISTRY,
+    _driver_green_evidence,
     evidence_order,
     load_all,
+    load_fingerprints,
 )
-
-T0 = 1_000_000.0  # synthetic evidence-file mtime
 
 
 def test_unproven_front_and_priority_order():
+    """Unproven names come first, in registry order."""
     names = ["c", "a", "b", "z"]
-    green = {"z": (3, T0)}
-    mt = dict.fromkeys(names, 0.0)
-    out = evidence_order(names, green, mt)
-    assert out[-1] == "z"  # only green name sorts last
-    assert set(out[:3]) == {"a", "b", "c"}  # unproven all front
-
-
-def test_priority_first_occurrence_wins():
-    # The round-6 head re-lists names that also appear in the
-    # historical tail; the dict build must keep the HEAD position.
-    dups = [n for n in UNPROVEN_PRIORITY if UNPROVEN_PRIORITY.count(n) > 1]
-    assert "agg_sketch_prod" in dups  # the reorder relies on this
-    first = {}
-    for i, n in enumerate(UNPROVEN_PRIORITY):
-        first.setdefault(n, i)
-    out = evidence_order(
-        ["stream_cms_topk", "fn_split_csv"], {}, {"stream_cms_topk": 0.0, "fn_split_csv": 0.0}
-    )
-    # stream_cms_topk is in the round-6 head (index < fn_split_csv's)
-    assert first["stream_cms_topk"] < first["fn_split_csv"]
-    assert out == ["stream_cms_topk", "fn_split_csv"]
-
-
-def test_stale_green_sorts_between_unproven_and_fresh_green():
-    """Within the SAME proving round, edited-since-proof sorts ahead of
-    unedited (staleness is the round tiebreak)."""
-    names = ["unproven", "stale", "fresh"]
-    green = {"stale": (2, T0), "fresh": (2, T0)}
-    mt = {
-        "unproven": T0,
-        "stale": T0 + _STALENESS_SLACK_S + 1,  # edited after proof
-        "fresh": T0 + 1,  # inside the checkout-restamp slack
-    }
-    assert evidence_order(names, green, mt) == ["unproven", "stale", "fresh"]
-
-
-def test_evidence_age_beats_staleness_across_rounds():
-    """Round-7 restructure: a FRESH round-1 proof must re-enter the
-    window ahead of a STALE round-5 proof. Module-granularity mtime
-    churn (one edit stales every query in the file) must not starve
-    genuinely old evidence — local pytest already re-proves every
-    query against its oracle on each run, so staleness is only a
-    same-round tiebreak, not a tier."""
-    names = ["stale_r5", "fresh_r1"]
-    green = {"stale_r5": (5, T0), "fresh_r1": (1, T0)}
-    mt = {"stale_r5": T0 + _STALENESS_SLACK_S + 1, "fresh_r1": T0}
-    assert evidence_order(names, green, mt) == ["fresh_r1", "stale_r5"]
+    out = evidence_order(names, {"z": 3}, {})
+    assert out == ["c", "a", "b", "z"]
 
 
 def test_green_rotates_oldest_proving_round_first():
@@ -76,38 +30,45 @@ def test_green_rotates_oldest_proving_round_first():
     freshly-proven ones — oldest FILENAME round first, registry
     position as the tiebreak."""
     names = ["r5a", "r2b", "r2a", "r4a"]
-    green = {"r5a": (5, T0), "r2b": (2, T0), "r2a": (2, T0), "r4a": (4, T0)}
-    mt = dict.fromkeys(names, 0.0)
+    green = {"r5a": 5, "r2b": 2, "r2a": 2, "r4a": 4}
     # registry order is the list order: r2b precedes r2a
-    assert evidence_order(names, green, mt) == ["r2b", "r2a", "r4a", "r5a"]
+    assert evidence_order(names, green, {}) == ["r2b", "r2a", "r4a", "r5a"]
 
 
-def test_unlisted_unproven_sort_after_all_listed():
-    """The sentinel for tier-0 names NOT in UNPROVEN_PRIORITY must
-    exceed every listed first-occurrence index. The list carries
-    head/tail duplicates, so first-occurrence indices can reach past
-    the deduped count — the sentinel base is the RAW list length
-    (round-6 advice: a len(deduped)-based sentinel let unlisted names
-    jump ahead of listed ones with large first-occurrence indices).
+def test_change_after_green_round_goes_to_tier_0():
+    """A fingerprint change in a round LATER than the newest green row
+    re-fronts the query; a change in or before that round does not."""
+    names = ["a", "b", "c"]
+    green = {"a": 8, "b": 8, "c": 9}
+    assert evidence_order(names, green, {"b": 18}) == ["b", "a", "c"]
+    assert evidence_order(names, green, {"b": 8}) == ["a", "b", "c"]
 
-    The probe name must be the listed name whose FIRST-OCCURRENCE index
-    is maximal — UNPROVEN_PRIORITY[-1] can be a duplicate whose first
-    occurrence is early, in which case the old len(deduped) sentinel
-    would also pass and the guard is vacuous (round-7 advice)."""
-    first: dict[str, int] = {}
-    for i, n in enumerate(UNPROVEN_PRIORITY):
-        first.setdefault(n, i)
-    listed = max(first, key=first.__getitem__)
-    deduped = len(first)
-    assert first[listed] >= deduped, (
-        "probe name no longer exercises the boundary: its first-occurrence "
-        f"index {first[listed]} is below the deduped count {deduped}, so the "
-        "old buggy len(deduped)-based sentinel would also pass this test"
+
+def test_newer_green_row_returns_changed_query_to_tier_1():
+    """Once the driver proves the changed query again, it rotates by
+    that new round like any other green query."""
+    names = ["a", "b", "c"]
+    green = {"a": 8, "b": 18, "c": 9}
+    assert evidence_order(names, green, {"b": 18}) == ["a", "c", "b"]
+
+
+def test_changing_one_query_moves_exactly_that_query():
+    """On the live evidence, marking one tier-1 query from the middle
+    of the order as changed after every round moves it into tier 0 and
+    leaves the relative order of every other query alone."""
+    load_all()
+    names = list(REGISTRY)
+    green = _driver_green_evidence()
+    changed_in = {n: e["changed_in"] for n, e in load_fingerprints().items()}
+    before = evidence_order(names, green, changed_in)
+    tier0 = sum(1 for n in names if n not in green or changed_in.get(n, 0) > green[n])
+    moved = before[len(before) // 2]
+    assert moved in green and changed_in.get(moved, 0) <= green[moved]
+    after = evidence_order(
+        names, green, {**changed_in, moved: max(green.values()) + 1}
     )
-    names = ["zz_unlisted_query", listed]
-    mt = dict.fromkeys(names, 0.0)
-    out = evidence_order(names, {}, mt)
-    assert out == [listed, "zz_unlisted_query"]
+    assert after.index(moved) <= tier0  # inside the grown tier 0
+    assert [n for n in after if n != moved] == [n for n in before if n != moved]
 
 
 def test_operators_md_histogram_matches_correctness_union():
@@ -135,7 +96,7 @@ def test_operators_md_histogram_matches_correctness_union():
     live_hist: dict[str, int] = {}
     for n in specs:
         if n in green:
-            key = f"r{green[n][0]}"
+            key = f"r{green[n]}"
             live_hist[key] = live_hist.get(key, 0) + 1
     live_unproven = sum(1 for n in specs if n not in green)
     assert (doc_hist, int(m.group(2))) == (live_hist, live_unproven), (
@@ -146,27 +107,16 @@ def test_operators_md_histogram_matches_correctness_union():
 
 
 def test_live_window_fronts_unproven_queries():
-    """While a driver-evidence backlog exists, load_all()'s window head
-    must carry names with NO green CORRECTNESS row — the property the
-    old hard-coded round-head pin was standing in for (it broke the
-    moment the driver proved those names; this version stays true
-    across rounds until the backlog fully drains, then passes
-    vacuously)."""
-    from job_market_research_spark.registry import _driver_green_evidence
-
+    """load_all()'s live order obeys the rule: every tier-0 name (no
+    green driver row, or changed since it) precedes every tier-1 name,
+    and tier-1 proving rounds never decrease along the order."""
     green = _driver_green_evidence()
+    changed_in = {n: e["changed_in"] for n, e in load_fingerprints().items()}
     names = list(load_all())
-    unproven = [n for n in names if n not in green]
-    if not unproven:  # backlog drained — rotation is oldest-green-first
-        return
-    head = names[: len(unproven)]
-    assert all(n not in green for n in head), (
-        "green query inside the unproven window head: "
-        f"{[n for n in head if n in green][:5]}"
+    tier0 = [n not in green or changed_in.get(n, 0) > green[n] for n in names]
+    assert tier0 == sorted(tier0, reverse=True), (
+        "tier-1 query ahead of a tier-0 query: "
+        f"{[n for n, t in zip(names, tier0) if not t][:5]}"
     )
-    # and the head order follows UNPROVEN_PRIORITY first occurrences
-    first: dict[str, int] = {}
-    for i, n in enumerate(UNPROVEN_PRIORITY):
-        first.setdefault(n, i)
-    listed_head = [n for n in head if n in first]
-    assert listed_head == sorted(listed_head, key=lambda n: first[n])
+    rounds = [green[n] for n, t in zip(names, tier0) if not t]
+    assert rounds == sorted(rounds), "tier-1 proving rounds decrease along load_all()"
