@@ -49,35 +49,13 @@ _TS_PROBE_CACHE: dict[str, int] = {}
 #: Caveats (by design, documented for harness authors):
 #: - The cached plan PINS the file listing (InMemoryFileIndex) from
 #:   first load for the life of the app — a harness that REWRITES a
-#:   table under sf_dir mid-session must call `invalidate_df_cache()`
-#:   (below) or it will scan the stale file list.
+#:   table under sf_dir needs a new Spark app (stop the session and
+#:   build a fresh one) or it will scan the stale file list.
 #: - The dict is mutated without a lock: the engine is driven from a
 #:   single Python thread (driver / pytest / bench). Concurrent
 #:   multi-threaded load() calls could at worst double-plan a table,
 #:   never corrupt results, but are not a supported pattern.
 _DF_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
-def invalidate_df_cache(path_prefix: str | None = None) -> int:
-    """Drop memoized DataFrames (and the events.ts probe memos) whose
-    table path starts with `path_prefix` — all entries when None.
-    Returns the number of DataFrame entries dropped. For harnesses that
-    regenerate testdata mid-session; normal runs never need this."""
-    keys = [
-        k
-        for k in _DF_CACHE
-        if path_prefix is None or k[1].startswith(path_prefix)
-    ]
-    for k in keys:
-        del _DF_CACHE[k]
-    for cache in (_TS_UNIT_CACHE, _TS_PROBE_CACHE):
-        for p in [
-            p
-            for p in cache
-            if path_prefix is None or p.startswith(path_prefix)
-        ]:
-            del cache[p]
-    return len(keys)
 
 
 def _events_ts_unit(path: str) -> str:

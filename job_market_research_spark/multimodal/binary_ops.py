@@ -28,19 +28,6 @@ from job_market_research_spark.io import load
 from job_market_research_spark.registry import query
 
 
-def decode_media(payload: bytes) -> dict:
-    """Media decode boundary. Formats with a dependency-free codec
-    (netpbm images, WAV PCM — see `multimodal.codecs`) decode for REAL
-    when SPARK_GRAFT_REAL_CODEC is on (default); everything else
-    (JPEG/PNG/MP4) raises NotImplementedError until PIL/ffmpeg is wired
-    in production. The `multimodal_*_real` queries exercise the real
-    path end-to-end; the `*_stub` queries pin the contract for formats
-    without an installed codec."""
-    from job_market_research_spark.multimodal.codecs import decode_media as _real
-
-    return _real(payload)
-
-
 def fake_decode_header(doc_id: int) -> tuple[int, int, int]:
     """Deterministic stand-in for header parsing: (width, height,
     n_frames) derived from the id so the oracle can replay it."""
@@ -80,8 +67,9 @@ DECODE_SCHEMA = (
 
 def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """mapInPandas body: per Arrow batch, emit decode metadata. The
-    codec call is stubbed (see `decode_media`) with the deterministic
-    header fake."""
+    codec call is stubbed with the deterministic header fake; formats
+    with a dependency-free codec decode for real in `real_media`
+    through `codecs.decode_media`."""
     for pdf in batches:
         ids = pdf["doc_id"]
         yield pd.DataFrame(

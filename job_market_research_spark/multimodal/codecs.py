@@ -1,8 +1,8 @@
 """Real, dependency-free media codecs for the multimodal pipeline.
 
 PIL/ffmpeg are not available in this environment, but two production
-formats need nothing beyond numpy and the stdlib, so the codec boundary
-in `binary_ops` gets a REAL path here:
+formats need nothing beyond numpy and the stdlib, so those get a REAL
+decode path here (`decode_media`, called by `real_media`):
 
 - netpbm images (PGM ``P5`` grayscale, PPM ``P6`` RGB): raw binary
   headers + row-major samples, decoded straight into numpy arrays;
@@ -16,9 +16,7 @@ in `binary_ops` gets a REAL path here:
 
 Anything else (MP4/JPEG-pixels/PNG-pixels/...) still raises NotImplementedError at
 the same boundary — the stub is for formats whose codecs genuinely
-aren't installed, not for the codec path itself. Selection is
-``SPARK_GRAFT_REAL_CODEC`` (default on): with the flag off every format
-takes the stub path, mirroring a cluster image without codec libs.
+aren't installed, not for the codec path itself.
 
 All functions are executor-side (called from Arrow-batched mapInPandas
 bodies); nothing here touches the driver or the JVM.
@@ -27,15 +25,9 @@ bodies); nothing here touches the driver or the JVM.
 from __future__ import annotations
 
 import io
-import os
 import wave
 
 import numpy as np
-
-
-def real_codec_enabled() -> bool:
-    """Feature flag for the real decode path (default ON)."""
-    return os.environ.get("SPARK_GRAFT_REAL_CODEC", "1") == "1"
 
 
 # ---------------------------------------------------------------- netpbm
@@ -486,10 +478,8 @@ def decode_media(payload: bytes) -> dict:
 
     Returns ``{"kind", "width", "height", "channels"}`` for images and
     ``{"kind", "sample_rate", "n_samples", "channels"}`` for audio.
-    Unknown formats (or the flag off) raise NotImplementedError — the
-    caller's stub/quarantine path owns those."""
-    if not real_codec_enabled():
-        raise NotImplementedError("real codec path disabled (SPARK_GRAFT_REAL_CODEC=0)")
+    Unknown formats raise NotImplementedError — the caller's
+    stub/quarantine path owns those."""
     kind = sniff_kind(payload)
     if kind in ("pgm", "ppm"):
         img = decode_netpbm(payload)

@@ -59,6 +59,11 @@ def query(
     return deco
 
 
+#: Queries whose BUILDER runs real work (streaming drains, foreachBatch
+#: folds, sink writes) before returning the result frame: the plan
+#: census stars them, and the reroute audit never builds them.
+BUILDER_RUNS = re.compile(r"^(stream_|sink_|source_append)")
+
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 #: Written by scripts/plan_census.py: {name: {"fp": hex, "changed_in":

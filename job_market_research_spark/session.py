@@ -19,10 +19,13 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
 def _scratch_dir() -> str:
     """Gitignored `.scratch/` at the repo root — shared with
     sources.readers.SCRATCH — for engine byproducts (Derby, warehouse)."""
-    d = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch")
+    d = os.path.join(_REPO_ROOT, ".scratch")
     os.makedirs(d, exist_ok=True)
     return d
 
@@ -79,6 +82,10 @@ def get_spark(
         # builds its session through this factory first.
         .config("spark.sql.warehouse.dir", os.path.join(_scratch_dir(), "spark-warehouse"))
         .config("spark.driver.extraJavaOptions", derby_java_options)
+        # Arrow Python workers do not inherit the driver's sys.path:
+        # without this, a query with a Python worker fails with
+        # ModuleNotFoundError when run outside the repo root.
+        .config("spark.executorEnv.PYTHONPATH", _REPO_ROOT)
     )
     for k, v in (extra_conf or {}).items():
         # merge, don't clobber: a caller-supplied extraJavaOptions

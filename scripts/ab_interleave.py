@@ -27,9 +27,10 @@ Usage:
       job_market_research_spark.operators.intervals:q_window_concurrency_sweep \\
       my_experiment:staged_variant [sf_dir] [n_pairs]
 
-Summary prints min and median per side plus their ratios; judge
-warm-claim convention is the MIN (ambient spikes only ever slow a
-run down).
+Summary prints min and median per side plus their ratios, and the
+session's defaultParallelism (set by SPARK_GRAFT_CPUS through
+session.get_spark); judge warm-claim convention is the MIN (ambient
+spikes only ever slow a run down).
 """
 
 from __future__ import annotations
@@ -59,9 +60,7 @@ def run(a_spec: str, b_spec: str, sf_dir: str, n_pairs: int) -> None:
     from job_market_research_spark.session import get_spark
 
     a_fn, b_fn = resolve(a_spec), resolve(b_spec)
-    spark = get_spark(
-        app_name="ab-interleave", master="local[32]", shuffle_partitions=32
-    )
+    spark = get_spark(app_name="ab-interleave")  # SPARK_GRAFT_CPUS sizes it
     spark.sparkContext.setLogLevel("ERROR")
 
     timed(a_fn, spark, sf_dir)  # warm-up both sides, untimed
@@ -90,6 +89,7 @@ def run(a_spec: str, b_spec: str, sf_dir: str, n_pairs: int) -> None:
     ma, mb = _median(sa), _median(sb)
     print(f"min  A {sa[0]:.3f}  B {sb[0]:.3f}  B/A {sb[0] / sa[0]:.2f}")
     print(f"med  A {ma:.3f}  B {mb:.3f}  B/A {mb / ma:.2f}")
+    print(f"defaultParallelism {spark.sparkContext.defaultParallelism}")
     spark.stop()
 
 

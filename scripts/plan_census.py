@@ -31,11 +31,6 @@ from collections import Counter
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: Queries whose BUILDER runs real work (streaming drains, foreachBatch
-#: folds, sink writes) before returning the result frame — their plan
-#: summary describes the terminal read, not the drain.
-_BUILDER_RUNS = re.compile(r"^(stream_|sink_|source_append)")
-
 _JOIN_NODES = (
     "BroadcastHashJoin",
     "SortMergeJoin",
@@ -284,6 +279,7 @@ def write_fingerprints(fps: dict[str, str], errored: list[str]) -> list[str]:
 
 def main() -> None:
     from job_market_research_spark.registry import (
+        BUILDER_RUNS,
         FINGERPRINT_SCALE,
         load_all,
         plan_fingerprint,
@@ -369,7 +365,7 @@ def main() -> None:
         if mod != last_mod:
             lines.append(f"| **{mod}** | | | | | | | |")
             last_mod = mod
-        star = "\\*" if _BUILDER_RUNS.match(name) else ""
+        star = "\\*" if BUILDER_RUNS.match(name) else ""
         if err:
             # exception text goes into a table cell: pipes/newlines in
             # Spark AnalysisException messages would corrupt the layout

@@ -53,9 +53,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-#: Query families whose fn() runs real side effects at call time
-#: (writes, streaming drains) — excluded from BOTH passes below.
-SKIP_RE = r"^(stream_|sink_|source_append)"
+from job_market_research_spark.registry import BUILDER_RUNS  # noqa: E402
 
 
 #: Whole-module mention pattern for the staging API (including aliased
@@ -134,7 +132,7 @@ def staging_reachable_only_from_skipped(
 ) -> set:
     """Pure core of the helper-module guard (unit-tested directly):
     modules that mention the staging API, are import-reachable from a
-    SKIP_RE query's defining module, and are NOT reachable from any
+    BUILDER_RUNS query's defining module, and are NOT reachable from any
     non-skipped query's module. A staged frame in a SHARED helper is
     registered by its non-skipped consumers during the CONSTRUCT pass,
     so shared helpers are excused; a helper reachable exclusively from
@@ -204,11 +202,11 @@ def unregistered_mixed_reachability_names(
 
 
 def assert_no_staging_in_skipped_queries(specs) -> None:
-    """Fail loudly if a SKIP_RE-matching query could own a staged frame
+    """Fail loudly if a BUILDER_RUNS-matching query could own a staged frame
     the audit's CONSTRUCT pass never registers. Staged frames are
     registered at plan-construction time, so building every
     non-skipped query's plan registers every staged frame — PROVIDED
-    no skipped query owns one. Two checks, both derived from SKIP_RE
+    no skipped query owns one. Two checks, both derived from BUILDER_RUNS
     itself (ADVICE r14 — the old guard hard-coded the streaming/ and
     sources/ DIRECTORIES, which already missed source_append_merge in
     operators/setops.py):
@@ -236,7 +234,7 @@ def assert_no_staging_in_skipped_queries(specs) -> None:
 
     bad = []
     for name in specs:
-        if not re.match(SKIP_RE, name):
+        if not BUILDER_RUNS.match(name):
             continue
         mod = _sys.modules.get(specs[name].fn.__module__)
         path = getattr(mod, "__file__", None)
@@ -247,7 +245,7 @@ def assert_no_staging_in_skipped_queries(specs) -> None:
             bad.append((name, os.path.relpath(path)))
     if bad:
         raise SystemExit(
-            "reroute_audit: SKIP_RE queries defined in staging-touching "
+            "reroute_audit: BUILDER_RUNS queries defined in staging-touching "
             f"modules {sorted(set(bad))} — the audit's CONSTRUCT pass "
             "cannot register their frames; extend the audit to cover "
             "these owners first."
@@ -258,17 +256,17 @@ def assert_no_staging_in_skipped_queries(specs) -> None:
         d for d, p in files.items() if re.search(STAGING_RE, open(p).read())
     }
     skipped_mods = {
-        specs[n].fn.__module__ for n in specs if re.match(SKIP_RE, n)
+        specs[n].fn.__module__ for n in specs if BUILDER_RUNS.match(n)
     } & set(files)
     nonskipped_mods = {
-        specs[n].fn.__module__ for n in specs if not re.match(SKIP_RE, n)
+        specs[n].fn.__module__ for n in specs if not BUILDER_RUNS.match(n)
     } & set(files)
     rogue = staging_reachable_only_from_skipped(
         skipped_mods, nonskipped_mods, edges, mentions
     )
     if rogue:
         raise SystemExit(
-            "reroute_audit: staging API reachable ONLY from SKIP_RE "
+            "reroute_audit: staging API reachable ONLY from BUILDER_RUNS "
             f"queries' modules via {sorted(rogue)} — their staged "
             "frames are never registered by the CONSTRUCT pass, so the "
             "audit would under-report cache substitutions; extend the "
@@ -303,7 +301,7 @@ def audit(spark, sf: str, root: str) -> list[tuple[str, int, int]]:
     assert_no_staging_in_skipped_queries(specs)
     dfs = {}
     for n in sorted(specs):
-        if re.match(SKIP_RE, n):
+        if BUILDER_RUNS.match(n):
             continue  # builders run real work; plan shape not at issue
         try:
             dfs[n] = specs[n].fn(spark, sf)
@@ -330,10 +328,10 @@ def audit(spark, sf: str, root: str) -> list[tuple[str, int, int]]:
         if (ns := staging_site_names(p))
     }
     skipped_mods = {
-        specs[n].fn.__module__ for n in specs if re.match(SKIP_RE, n)
+        specs[n].fn.__module__ for n in specs if BUILDER_RUNS.match(n)
     } & set(files)
     nonskipped_mods = {
-        specs[n].fn.__module__ for n in specs if not re.match(SKIP_RE, n)
+        specs[n].fn.__module__ for n in specs if not BUILDER_RUNS.match(n)
     } & set(files)
     missing = unregistered_mixed_reachability_names(
         skipped_mods, nonskipped_mods, edges, site_names, registered
@@ -342,7 +340,7 @@ def audit(spark, sf: str, root: str) -> list[tuple[str, int, int]]:
         raise SystemExit(
             "reroute_audit: staged frames declared in mixed-reachability "
             f"modules were NOT registered by the construct pass: {missing} "
-            "— their staging calls sit on code paths only SKIP_RE queries "
+            "— their staging calls sit on code paths only BUILDER_RUNS queries "
             "take, so the audit under-reports cache substitutions; extend "
             "the audit to cover these owners first."
         )

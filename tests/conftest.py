@@ -5,13 +5,12 @@ from __future__ import annotations
 import os
 import sys
 
-import duckdb
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from job_market_research_spark.io import TABLES
 from job_market_research_spark.session import get_spark
+from tests.oracle_utils import oracle_con
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
@@ -29,9 +28,6 @@ def sf_dir() -> str:
 
 @pytest.fixture(scope="session")
 def duck(sf_dir):
-    con = duckdb.connect()
-    for t in TABLES:
-        path = os.path.join(sf_dir, f"{t}.parquet")
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
+    con = oracle_con(sf_dir)
     yield con
     con.close()

@@ -39,6 +39,19 @@ def normalize(columns: list[str], rows: list[tuple]) -> list[tuple]:
     return out
 
 
+def oracle_con(sf_dir: str):
+    """A DuckDB connection with every testdata table under `sf_dir`
+    bound as a view of its own name: the tables the oracle SQL reads."""
+    import duckdb
+
+    from job_market_research_spark.io import TABLES, table_path
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{table_path(sf_dir, t)}')")
+    return con
+
+
 def spark_result(df) -> tuple[list[str], list[tuple]]:
     return df.columns, [tuple(r) for r in df.collect()]
 

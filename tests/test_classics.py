@@ -7,6 +7,8 @@ disjunctive-predicate join."""
 
 from __future__ import annotations
 
+import os
+
 from job_market_research_spark.plans.classics import (
     q_agg_order_priority_semi,
     q_agg_revenue_forecast,
@@ -64,20 +66,14 @@ def test_returned_customers_topk_no_global_sort(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_nation_trade_volume_nonempty_at_sf001():
+def test_nation_trade_volume_nonempty_at_sf001(sf_dir):
     """agg_nation_trade_volume is legitimately empty at the smoke SF
     (10 suppliers / 25 nations); pin that the driver's sf0.01 gate
     sees real rows so the parity sweep is never vacuous."""
-    import duckdb
-
     from job_market_research_spark.registry import load_all
+    from tests.oracle_utils import oracle_con
 
-    con = duckdb.connect()
-    for t in ("lineitem", "orders", "customer", "supplier", "nation"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('/root/testdata/sf0.01/{t}.parquet')"
-        )
+    con = oracle_con(os.path.join(os.path.dirname(sf_dir), "sf0.01"))
     sql = load_all()["agg_nation_trade_volume"].oracle
     assert len(con.execute(sql).fetchall()) > 0
 

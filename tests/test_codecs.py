@@ -61,12 +61,6 @@ def test_unknown_format_still_raises():
         codecs.decode_media(b"\x89PNG\r\n\x1a\n....")
 
 
-def test_flag_off_forces_stub_path(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_REAL_CODEC", "0")
-    with pytest.raises(NotImplementedError):
-        codecs.decode_media(codecs.encode_pgm(np.zeros((2, 2), np.uint8)))
-
-
 def test_jpeg_header_roundtrip():
     payload = codecs.encode_jpeg_headers(640, 480, 3, comment=b"hi")
     meta = codecs.decode_media(payload)
