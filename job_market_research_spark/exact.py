@@ -115,9 +115,15 @@ def limb_sum_scaled(
     division typing keeps every true digit — the unconstrained
     decimal(38,0)/10^k quotient is capped to scale 6, which would
     silently round any scale > 6 (typing verified empirically on
-    4.1.2). Requires sum_digits + max(6, pow10 + 2) <= 38; an actual
-    |sum| overflowing sum_digits yields NULL (loud), never a wrong
-    number."""
+    4.1.2). Requires sum_digits + max(6, pow10 + 2) <= 38.
+
+    Overflow fails loudly only under ANSI mode (`spark.sql.ansi.enabled`
+    = true, Spark 4's default, which `session.get_spark` leaves on): a
+    limb sum past the long range raises ``[ARITHMETIC_OVERFLOW]``, and
+    an actual |sum| overflowing sum_digits raises
+    ``[NUMERIC_VALUE_OUT_OF_RANGE]`` — never a wrong number. With ANSI
+    off the same inputs give a silently wrapped limb sum (a wrong
+    number) and a NULL respectively."""
     if sum_digits + max(6, pow10 + 2) > 38:
         raise ValueError(
             f"sum_digits={sum_digits} too wide for scale {pow10}: "

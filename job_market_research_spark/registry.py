@@ -60,8 +60,8 @@ def query(
 
 
 #: Queries whose BUILDER runs real work (streaming drains, foreachBatch
-#: folds, sink writes) before returning the result frame: the plan
-#: census stars them, and the reroute audit never builds them.
+#: folds, sink writes) before returning the result frame. Read only by
+#: the plan census, which stars them in PLANS.md.
 BUILDER_RUNS = re.compile(r"^(stream_|sink_|source_append)")
 
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))

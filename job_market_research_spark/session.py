@@ -45,7 +45,15 @@ def get_spark(
       the DuckDB oracle (naive-UTC semantics).
     - shuffle partitions default to the local core count; on a real
       cluster AQE re-coalesces upward from the initial value.
+
+    In a process that already has an active session, that session is
+    returned as it is: none of the arguments is applied to it (pyspark's
+    getOrCreate would re-apply the SQL confs to the first caller's
+    session while keeping its master).
     """
+    live = SparkSession.getActiveSession()
+    if live is not None:
+        return live
     cpus = default_parallelism()
     derby_java_options = (
         f"-Dderby.system.home={_scratch_dir()} "
@@ -75,10 +83,7 @@ def get_spark(
         # dir and embedded Derby's log (JDBC sink tests) both default to
         # the process CWD, which litters the repo root across rounds.
         # NOTE: -D flags only take effect when THIS builder launches the
-        # driver JVM; in a process whose SparkContext already exists
-        # they no-op (getOrCreate returns the live session) and Derby
-        # falls back to its CWD defaults — acceptable for the secondary
-        # caller, harmless for the repo since every entry point here
+        # driver JVM; harmless for the repo since every entry point here
         # builds its session through this factory first.
         .config("spark.sql.warehouse.dir", os.path.join(_scratch_dir(), "spark-warehouse"))
         .config("spark.driver.extraJavaOptions", derby_java_options)

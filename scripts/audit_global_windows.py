@@ -11,8 +11,8 @@ test's ALLOWED_GLOBAL_WINDOW allowlist — both directions: un-allowlisted
 hits (prove the bound and allowlist, or rewrite) AND allowlisted names
 that never warn (stale allowlist entries).
 
-Round-9 baseline: 41 runtime hits, all allowlisted with stated bounds,
-zero stale entries.
+Baseline at sf0.001: 43 runtime hits, all allowlisted with stated
+bounds, zero stale entries.
 
 Usage: python scripts/audit_global_windows.py [sf_dir]
 Exit status 1 if either diff is non-empty.
@@ -21,7 +21,6 @@ Exit status 1 if either diff is non-empty.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -40,6 +39,7 @@ def main() -> int:
 
     from job_market_research_spark.registry import load_all
     from job_market_research_spark.session import get_spark
+    from tests.test_plan_hygiene import ALLOWED_GLOBAL_WINDOW
 
     specs = load_all()
     spark = get_spark(app_name="audit-global-windows")
@@ -58,10 +58,7 @@ def main() -> int:
         if b"No Partition Defined" in err.read():
             hits.append(name)
 
-    src = open(
-        os.path.join(os.path.dirname(__file__), "..", "tests", "test_plan_hygiene.py")
-    ).read()
-    allowed = set(re.findall(r'^    "([a-z0-9_]+)":', src, re.M))
+    allowed = set(ALLOWED_GLOBAL_WINDOW)
     unlisted = sorted(set(hits) - allowed)
     stale = sorted(allowed - set(hits))
     print(f"queries: {len(specs)}  runtime hits: {len(hits)}  errors: {len(errs)}")

@@ -296,16 +296,16 @@ def main() -> None:
     shutil.rmtree(work, ignore_errors=True)
     x1, xn = os.path.join(work, "x1"), os.path.join(work, f"x{copies}")
 
-    spark = get_spark(app_name="scale-probe", master="local[32]",
-                      shuffle_partitions=32)
+    spark = get_spark(app_name="scale-probe")  # SPARK_GRAFT_CPUS sizes it
     spark.sparkContext.setLogLevel("ERROR")
-    print(f"canary at start: {cpu_canary():.4f}")
+    par = spark.sparkContext.defaultParallelism
+    print(f"canary at start: {cpu_canary():.4f}  defaultParallelism: {par}")
     synthesize(spark, x1, 1)
     synthesize(spark, xn, copies)
 
     r1 = probe(spark, x1)
     rn = probe(spark, xn)
-    print(f"canary at end: {cpu_canary():.4f}")
+    print(f"canary at end: {cpu_canary():.4f}  defaultParallelism: {par}")
 
     print(f"\n| family | metric | x1 | x{copies} | ratio |")
     print("|---|---|---|---|---|")

@@ -1,6 +1,7 @@
 """Entry points outside the pytest session's own path setup: the
-registry-wide oracle sweep's CLI (scripts/driver_hash_sim.py), and
-Arrow Python workers started from a foreign working directory."""
+registry-wide oracle sweep's CLI (scripts/driver_hash_sim.py), a second
+session.get_spark call in a live process, and Arrow Python workers
+started from a foreign working directory."""
 
 from __future__ import annotations
 
@@ -23,13 +24,21 @@ def _sweep_main():
 
 def test_oracle_sweep_passes_named_query(spark, sf_dir):
     main = _sweep_main()
+    assert main([sf_dir, "--only=join_sector_count"]) == 0
+
+
+def test_get_spark_returns_live_session_untouched(spark):
+    """A second get_spark in a process with a live session hands that
+    session back as it is: the second caller's master and SQL confs are
+    not applied to the first caller's session."""
+    from job_market_research_spark.session import get_spark
+
+    master = spark.sparkContext.master
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        assert main([sf_dir, "--only=join_sector_count"]) == 0
-    finally:
-        # the sweep's get_spark reuses this session (getOrCreate) and
-        # sets its own shuffle-partition count on it
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    again = get_spark(master="local[1]", shuffle_partitions=7)
+    assert again is spark
+    assert spark.sparkContext.master == master
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
 
 
 def test_oracle_sweep_rejects_bad_only_before_running(sf_dir, monkeypatch, capsys):

@@ -16,6 +16,7 @@ from __future__ import annotations
 import struct
 
 import pytest
+from pyspark.errors import ArithmeticException
 from pyspark.sql import Row, functions as F
 
 from job_market_research_spark.exact import (
@@ -23,6 +24,7 @@ from job_market_research_spark.exact import (
     dec,
     exact_avg,
     exact_sum,
+    limb_sum_scaled,
     revenue_sum,
     scaled_revenue,
     sum_scale6_money,
@@ -215,3 +217,22 @@ def test_hilo_split_recomposes_for_either_sign(spark):
     ).collect()
     for r in out:
         assert r.re == r.v
+
+
+@pytest.mark.parametrize(
+    "v, kw, error",
+    [
+        # a 1-limb sum past the long range; with ANSI off it would wrap
+        # to -2^63, the wrong number the contract rules out
+        (1 << 62, dict(pow10=0, sum_digits=20, limbs=1), "ARITHMETIC_OVERFLOW"),
+        # a |sum| (12.00) past the declared sum_digits=3; with ANSI off
+        # it would be NULL
+        (600, dict(pow10=2, sum_digits=3, limbs=1), "NUMERIC_VALUE_OUT_OF_RANGE"),
+    ],
+)
+def test_limb_sum_scaled_overflow_raises(spark, v, kw, error):
+    """limb_sum_scaled overflow fails loudly under the session factory's
+    ANSI mode: it raises, and never returns a number."""
+    df = spark.createDataFrame([Row(v=v), Row(v=v)])
+    with pytest.raises(ArithmeticException, match=error):
+        df.agg(limb_sum_scaled(F.col("v"), **kw).alias("s")).collect()

@@ -690,8 +690,9 @@ def test_staged_frames_do_not_silently_reroute_fused_queries(spark, sf_dir):
     SLOWER at sf0.1 (r12), so a NEW staged frame must not be able to
     reroute an existing query without an A/B-backed allowlist entry.
     Runs scripts/reroute_audit.audit in the suite session: construct
-    every auditable plan (registering every staged frame — no owner
-    list), then diff each plan's staged-read count against PLANS.md.
+    every registered query, builder-runs ones included (registering
+    every staged frame — no owner list), then diff each plan's
+    staged-read count against PLANS.md.
     Deterministic in any suite cache state, since substitution
     happens at physical-planning time, after all registration."""
     import importlib.util
@@ -720,127 +721,3 @@ def test_staged_frames_do_not_silently_reroute_fused_queries(spark, sf_dir):
         "subtree no longer canonicalizes equal."
     )
 
-
-def _reroute_audit_module():
-    import importlib.util
-    import os
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "reroute_audit", os.path.join(root, "scripts", "reroute_audit.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod
-
-
-def test_staging_exclusivity_guard_flags_private_helpers_only():
-    """The helper-module half of the reroute-audit guard: a staging
-    call in a module reachable ONLY from skipped (stream_*/sink_*)
-    queries is flagged — its frames would never be registered by the
-    audit's CONSTRUCT pass — while a helper shared with any
-    non-skipped query is excused (that sibling registers the frame
-    at construction time). Synthetic graph, pure logic."""
-    mod = _reroute_audit_module()
-    edges = {
-        "pkg.streaming.sessions": {"pkg.streaming.state"},
-        "pkg.streaming.state": {"pkg.staging"},
-        "pkg.plans.analytics": {"pkg.io"},
-        "pkg.io": set(),
-        "pkg.staging": set(),
-    }
-    mentions = {"pkg.streaming.state", "pkg.staging"}
-    rogue = mod.staging_reachable_only_from_skipped(
-        {"pkg.streaming.sessions"}, {"pkg.plans.analytics"}, edges, mentions
-    )
-    assert rogue == {"pkg.streaming.state", "pkg.staging"}
-
-    # Shared helper: the non-skipped module also imports it -> excused.
-    edges["pkg.plans.analytics"] = {"pkg.io", "pkg.streaming.state"}
-    rogue = mod.staging_reachable_only_from_skipped(
-        {"pkg.streaming.sessions"}, {"pkg.plans.analytics"}, edges, mentions
-    )
-    assert rogue == set()
-
-
-def test_mixed_reachability_registration_check_flags_unregistered():
-    """r15 verdict item 4: the excuse check 2 grants to a helper
-    reachable from both sides is now CHECKED — after the construct
-    pass, every literal frame name in a mixed-reachability module must
-    be in the staging registry. Synthetic graph, pure logic: `beta`
-    declared in the shared helper but never registered is flagged;
-    `gamma` in a module no skipped query can reach is not this check's
-    business; full registration clears."""
-    mod = _reroute_audit_module()
-    edges = {
-        "pkg.streaming.sessions": {"pkg.helpers"},
-        "pkg.plans.analytics": {"pkg.helpers"},
-        "pkg.helpers": set(),
-        "pkg.private": set(),
-    }
-    sites = {"pkg.helpers": {"alpha", "beta"}, "pkg.private": {"gamma"}}
-    missing = mod.unregistered_mixed_reachability_names(
-        {"pkg.streaming.sessions"},
-        {"pkg.plans.analytics"},
-        edges,
-        sites,
-        {"alpha"},
-    )
-    assert missing == {"pkg.helpers": {"beta"}}
-    missing = mod.unregistered_mixed_reachability_names(
-        {"pkg.streaming.sessions"},
-        {"pkg.plans.analytics"},
-        edges,
-        sites,
-        {"alpha", "beta"},
-    )
-    assert missing == {}
-
-
-def test_staging_site_name_extraction(tmp_path):
-    """Literal frame names are read from both staged_frame's 2nd arg
-    and app_staged's key-tuple head (aliased imports included);
-    dynamic names stay invisible (the documented residual boundary)."""
-    mod = _reroute_audit_module()
-    p = tmp_path / "m.py"
-    p.write_text(
-        "def f(spark, sf, dyn):\n"
-        "    a = staged_frame(spark, 'alpha', sf, lambda: None)\n"
-        "    b = _app_staged(spark, ('beta', sf, 3), lambda: None)\n"
-        "    c = app_staged(spark, (dyn, sf), lambda: None)\n"
-    )
-    assert mod.staging_site_names(str(p)) == {"alpha", "beta"}
-
-
-def test_import_graph_resolves_init_relative_imports(tmp_path, monkeypatch):
-    """ADVICE r15: `from . import x` inside a package's __init__.py
-    must resolve relative to the package ITSELF, not its parent — the
-    old form silently dropped those edges."""
-    pkg = tmp_path / "rrpkg" / "sub"
-    pkg.mkdir(parents=True)
-    (tmp_path / "rrpkg" / "__init__.py").write_text("")
-    (pkg / "__init__.py").write_text("from . import leaf\n")
-    (pkg / "leaf.py").write_text("")
-    monkeypatch.syspath_prepend(str(tmp_path))
-    mod = _reroute_audit_module()
-    _files, edges = mod._package_import_graph("rrpkg")
-    assert "rrpkg.sub.leaf" in edges["rrpkg.sub"]
-
-
-def test_staging_guard_import_graph_sees_function_body_imports():
-    """The real package graph must carry edges for imports INSIDE
-    function bodies (most query fns import lazily) — spot-checked on
-    a known lazy edge, and the full guard must pass at HEAD."""
-    mod = _reroute_audit_module()
-    files, edges = mod._package_import_graph()
-    # operators/joins.py imports load from ..io at module top; the
-    # streaming modules import package modules inside fns - both kinds
-    # must appear.
-    assert "job_market_research_spark.io" in edges["job_market_research_spark.operators.joins"]
-    assert any(
-        e for e in edges["job_market_research_spark.streaming.windows"]
-    ), "streaming.windows has package imports; graph saw none"
-
-    from job_market_research_spark.registry import load_all
-
-    mod.assert_no_staging_in_skipped_queries(load_all())
