@@ -118,7 +118,7 @@ def limb_sum_scaled(
     4.1.2). Requires sum_digits + max(6, pow10 + 2) <= 38.
 
     Overflow fails loudly only under ANSI mode (`spark.sql.ansi.enabled`
-    = true, Spark 4's default, which `session.get_spark` leaves on): a
+    = true, Spark 4's default, which `session.get_spark` pins): a
     limb sum past the long range raises ``[ARITHMETIC_OVERFLOW]``, and
     an actual |sum| overflowing sum_digits raises
     ``[NUMERIC_VALUE_OUT_OF_RANGE]`` — never a wrong number. With ANSI

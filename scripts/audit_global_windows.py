@@ -21,7 +21,9 @@ Exit status 1 if either diff is non-empty.
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
+import tempfile
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -29,13 +31,21 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 def main() -> int:
     sf = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
-    # Re-exec with stderr tee'd to a file we can tail per query.
-    errpath = "/tmp/audit_global_windows.stderr"
-    if os.environ.get("_AUDIT_CHILD") != "1":
-        os.environ["_AUDIT_CHILD"] = "1"
-        with open(errpath, "wb") as f:
-            os.dup2(f.fileno(), 2)
-        os.execv(sys.executable, [sys.executable, os.path.abspath(__file__), sf])
+    # Re-run as a child whose stderr goes to a per-run file it tails per
+    # query; the file's path travels in _AUDIT_CHILD and the file is
+    # removed when the child exits.
+    errpath = os.environ.get("_AUDIT_CHILD")
+    if errpath is None:
+        fd, errpath = tempfile.mkstemp(prefix="audit_global_windows.", suffix=".stderr")
+        try:
+            with os.fdopen(fd, "wb") as f:
+                return subprocess.run(
+                    [sys.executable, os.path.abspath(__file__), sf],
+                    stderr=f,
+                    env={**os.environ, "_AUDIT_CHILD": errpath},
+                ).returncode
+        finally:
+            os.remove(errpath)
 
     from job_market_research_spark.registry import load_all
     from job_market_research_spark.session import get_spark

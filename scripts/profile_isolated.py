@@ -10,7 +10,9 @@ takes one: a fresh JVM, the query alone, warm (min over reps after a
 discarded warmup), with the CPU canary stamped so the number can be
 compared across machine states, plus the executed-plan shape facts
 (scans / exchanges / ReusedExchange / joins / staged reads) the claims
-in OPTIMIZATION_r16.md cite.
+in OPTIMIZATION_r16.md cite, and the JVM heap bytes allocated by the
+warmup run and (median) by the timed reps, from
+`ThreadMXBean.getTotalThreadAllocatedBytes` over all threads.
 
 Usage:
   python scripts/profile_isolated.py name1,name2 [sf_dir] [reps]
@@ -55,18 +57,24 @@ def main() -> None:
         ).write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0
 
+    threads = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
+
+    def run(df) -> tuple[float, int]:
+        """Wall seconds and JVM heap bytes allocated (all threads) of
+        one execution."""
+        a0 = threads.getTotalThreadAllocatedBytes()
+        t0 = time.perf_counter()
+        df.write.format("noop").mode("overwrite").save()
+        return time.perf_counter() - t0, threads.getTotalThreadAllocatedBytes() - a0
+
     canary()  # codegen warmup
     c0 = min(canary() for _ in range(2))
     for name in names:
         fn = specs[name].fn
         spark.sparkContext.setJobDescription(f"profile:{name}")
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warmup
-        times = []
-        for _ in range(reps):
-            df = fn(spark, sf_dir)  # rebuild per rep (timing gotcha)
-            t0 = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            times.append(time.perf_counter() - t0)
+        _, warm_alloc = run(fn(spark, sf_dir))  # warmup
+        # rebuild per rep (timing gotcha)
+        times, allocs = zip(*(run(fn(spark, sf_dir)) for _ in range(reps)))
         df = fn(spark, sf_dir)
         s = summarize_tree(df)
         plan_txt = spark._jvm.PythonSQLUtils.explainString(
@@ -78,6 +86,8 @@ def main() -> None:
             f" (reps {['%.3f' % t for t in times]})"
             f" | scans {s['scans']} exch {s['exchanges']} reusedExch {reused}"
             f" stg {s['staged']} joins {s['joins']} win {s['windows']}"
+            f" | jvm alloc warmup {warm_alloc / 1e6:.0f}MB"
+            f" med {sorted(allocs)[len(allocs)//2] / 1e6:.0f}MB"
         )
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
