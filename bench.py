@@ -49,6 +49,21 @@ HEADLINE = [
 ]
 
 
+def cpu_canary(spark) -> float:
+    """Machine-load canary: wall seconds of a CONSTANT-size generated
+    workload (no file I/O, no plan that ever changes round-to-round).
+    Its wall clock moves only with ambient machine load + JVM health,
+    so cross-round comparisons can be normalized (timing/canary)
+    instead of burning a round adjudicating drift (this happened in r6
+    AND r8). Callers run it once as codegen warmup, then take the min
+    of the following runs."""
+    t0 = time.perf_counter()
+    spark.range(0, 200_000_000, 1, 32).selectExpr(
+        "sum(id % 7) AS s", "count(*) AS n"
+    ).write.format("noop").mode("overwrite").save()
+    return time.perf_counter() - t0
+
+
 def run_once(sf_dir: str, sf: float) -> dict:
     """Time the query set in THIS process (one JVM); return the result
     dict. Headline queries run BENCH_REPS times (default 2) and report
@@ -67,21 +82,8 @@ def run_once(sf_dir: str, sf: float) -> dict:
     # JVM + first-plan warmup so timings measure the queries, not startup.
     specs[names[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
 
-    # Machine-load canary: a CONSTANT-size generated workload (no file
-    # I/O, no plan that ever changes round-to-round). Its wall clock
-    # moves only with ambient machine load + JVM health, so cross-round
-    # headline comparisons can be normalized (headline/canary) instead
-    # of burning a round adjudicating drift (this happened in r6 AND
-    # r8). Timed min-of-2 after its own codegen warmup.
-    def _canary_once() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id % 7) AS s", "count(*) AS n"
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
-    _canary_once()  # codegen warmup
-    canary = round(min(_canary_once() for _ in range(2)), 4)
+    cpu_canary(spark)  # codegen warmup
+    canary = round(min(cpu_canary(spark) for _ in range(2)), 4)
 
     # IO canary: a CONSTANT file-scan workload (full lineitem pass,
     # trivial agg — the plan never changes round-to-round). The CPU

@@ -156,7 +156,7 @@ def staged_und(spark, sf_dir: str) -> DataFrame:
     k-core, BFS, modularity) — each unrolled round references the edge
     table again, so an unstaged loop re-runs the explode + distinct
     shuffle per round. Same shared-leg discipline as the dedup
-    family's staged shingles (staging.app_staged); at 100 TB this is
+    family's staged shingles (staging.staged_frame); at 100 TB this is
     the canonical edge list every graph pipeline writes out once
     (bucketed by node id) before iterating.
 
@@ -447,26 +447,25 @@ def q_graph_kcore_peel(spark, sf_dir: str) -> DataFrame:
     discipline. Returns the survivor count per round — strictly
     non-increasing, engine-exact.
 
-    Each round's survivor set is staged (app_staged, |V|-bounded):
+    Each round's survivor set is staged (staged_frame, |V|-bounded):
     alive_r is consumed TWICE (its own count row and round r+1's
     semi-joins), so an unstaged unroll re-executes round 1 three
     times and round 2 twice — O(R²) subtree blow-up (the plan census
     recorded 139 scans before staging). Staging is the in-app form of
     the per-round materialization every iterative graph engine does."""
-    import os
-
-    from job_market_research_spark.staging import app_staged
+    from job_market_research_spark.staging import staged_frame
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     und = staged_und(spark, sf_dir)
     alive = docs.select(F.col("doc_id").alias("v"))
     counts = [alive.agg(F.count("*").cast("long").alias("n_alive")).select(F.lit(0).alias("round"), "n_alive")]
-    key = os.path.realpath(os.path.abspath(sf_dir))
     for r in range(1, KCORE_ROUNDS + 1):
-        alive = app_staged(
+        alive = staged_frame(
             spark,
-            ("kcore_alive", key, r),
+            "kcore_alive",
+            sf_dir,
             lambda und=und, alive=alive: kcore_round(und, alive),
+            r,
         )
         counts.append(
             alive.agg(F.count("*").cast("long").alias("n_alive")).select(
@@ -553,11 +552,8 @@ def q_graph_bfs_hops(spark, sf_dir: str) -> DataFrame:
     # O(2^R) subtrees over BFS_ROUNDS=4. Staged, each round executes
     # once (the iterative-engine materialization discipline; |reached|
     # rows, never corpus-sized).
-    import os
+    from job_market_research_spark.staging import staged_frame
 
-    from job_market_research_spark.staging import app_staged
-
-    key = os.path.realpath(os.path.abspath(sf_dir))
     for r in range(BFS_ROUNDS):
         def _round(bi=bi, dist=dist):
             expanded = bi.join(
@@ -569,7 +565,7 @@ def q_graph_bfs_hops(spark, sf_dir: str) -> DataFrame:
                 .agg(F.min("hop").alias("hop"))
             )
 
-        dist = app_staged(spark, ("bfs_dist", key, r), _round)
+        dist = staged_frame(spark, "bfs_dist", sf_dir, _round, r)
     return (
         dist.groupBy(F.col("hop").cast("int").alias("hop"))
         .agg(
@@ -793,9 +789,7 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
     sum in exact DECIMAL with map-side partials, and the L1 total is a
     broadcast 1-row aggregate. Scores re-attach to the full node spine
     (coalesce 0) so sink/source nodes keep rows on both engines."""
-    import os
-
-    from job_market_research_spark.staging import app_staged
+    from job_market_research_spark.staging import staged_frame
 
     docs = load(spark, sf_dir, "documents").select("doc_id")
     n = docs.count()
@@ -803,7 +797,7 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
     # SCALE.md): the edges subtree re-executes inside each staged
     # half-step build (2×HITS_ROUNDS derivations — ReuseExchange
     # cannot dedupe across the materialization boundaries), but an
-    # app_staged edges frame measured a WASH at sf0.1 (interleaved
+    # staged edges frame measured a WASH at sf0.1 (interleaved
     # 5-pair A/B: min-warm 1.16 vs 1.39 s, both colds 10.7 s) while
     # its canonical subtree substituted into FIVE sibling plans —
     # including the wedge family (triangle_count, link_prediction),
@@ -814,10 +808,9 @@ def q_graph_hits(spark, sf_dir: str) -> DataFrame:
     edges = _edges(docs, n)
     spine = docs.select(F.col("doc_id").alias("node"))
     state = spine.select("node", F.lit(1.0).alias("h"))
-    key = os.path.realpath(os.path.abspath(sf_dir))
     for r in range(HITS_ROUNDS):
         def _stage(name, df, r=r):
-            return app_staged(spark, ("hits", key, r, name), lambda: df)
+            return staged_frame(spark, "hits", sf_dir, lambda: df, r, name)
 
         state = _stage("state", _hits_round(edges, spine, state, _stage))
     return state.select(

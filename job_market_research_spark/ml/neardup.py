@@ -41,11 +41,8 @@ AUGMENTED_CORPUS_SQL = """
 
 # Per-Spark-app staging for the dedup family's shared frames
 # (augmented corpus, shingle rows, minhash band rows, verification
-# profiles) — see staging.app_staged for the memo/persist discipline.
-from job_market_research_spark.staging import (
-    app_staged as _app_staged,
-    staged_frame as _staged_frame,
-)
+# profiles) — see staging.staged_frame for the memo/persist discipline.
+from job_market_research_spark.staging import staged_frame as _staged_frame
 
 
 def augmented_corpus(spark, sf_dir: str) -> DataFrame:
@@ -220,12 +217,12 @@ def staged_shingles(spark, sf_dir: str, n: int = 3) -> DataFrame:
     the dedup family's shared expensive leg — minhash LSH, the
     incremental index probe and the recall audit all start from this
     identical frame (r11 verdict item 1)."""
-    import os
-
-    return _app_staged(
+    return _staged_frame(
         spark,
-        ("shingles", os.path.realpath(os.path.abspath(sf_dir)), n),
+        "shingles",
+        sf_dir,
         lambda: _shingle_rows(augmented_corpus(spark, sf_dir), n),
+        n,
     )
 
 

@@ -44,7 +44,7 @@ def staged_embeddings(spark, sf_dir: str) -> DataFrame:
     the ANN family's shared leg, staged once per (app, sf_dir): the
     double-cast + L2 norm fold ran per query across ~10 ANN/selection
     operators. At 100 TB this is the materialized vector index every
-    production ANN system maintains (see staging.app_staged); values
+    production ANN system maintains (see staging.staged_frame); values
     are the exact expressions each query computed inline, so every
     oracle is untouched."""
 

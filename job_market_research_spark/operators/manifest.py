@@ -26,25 +26,21 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from job_market_research_spark.io import load
 from job_market_research_spark.registry import query
 from job_market_research_spark.sources.readers import scratch_dir
+from job_market_research_spark.staging import staged_files
 
 #: Range-clustered layout: file count and the probe window.
 MANIFEST_FILES = 8
 _WIN_LO = "1996-01-01 00:00:00"
 _WIN_HI = "1996-07-01 00:00:00"
 
-#: Memoized staged layout + manifest per sf_dir (immutable testdata).
-_STAGED: dict[str, tuple[str, list[dict]]] = {}
-
-
-def stage_range_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[dict]]:
+@staged_files
+def stage_range_clustered(
+    spark: SparkSession, sf_dir: str, *, out: str
+) -> tuple[str, list[dict]]:
     """Write orders range-clustered by o_orderdate into MANIFEST_FILES
     files and derive the per-file manifest (min/max date, row count).
     The manifest is |files| rows — collecting it to the driver is the
     bounded-metadata pattern, not a data collect."""
-    key = os.path.abspath(sf_dir)
-    if key in _STAGED:
-        return _STAGED[key]
-    out = scratch_dir("manifest_orders")
     (
         load(spark, sf_dir, "orders")
         .repartitionByRange(MANIFEST_FILES, "o_orderdate")
@@ -64,7 +60,6 @@ def stage_range_clustered(spark: SparkSession, sf_dir: str) -> tuple[str, list[d
             .collect()
         )
     ]
-    _STAGED[key] = (out, manifest)
     return out, manifest
 
 
@@ -199,28 +194,22 @@ def q_maintenance_compaction_plan(spark, sf_dir: str) -> DataFrame:
 TT_COMMITS = 4
 TT_AS_OF = 2
 
-#: Memoized commit log per sf_dir: [(commit_id, path, n_rows), ...].
-_COMMIT_LOG: dict[str, list[tuple[int, str, int]]] = {}
-
-
-def stage_commit_log(spark: SparkSession, sf_dir: str) -> list[tuple[int, str, int]]:
+@staged_files
+def stage_commit_log(
+    spark: SparkSession, sf_dir: str, *, out: str
+) -> list[tuple[int, str, int]]:
     """Simulate a lake table's append history: TT_COMMITS commits, each
     landing one file that holds the o_orderkey % TT_COMMITS == commit
     slice of orders. The commit log (one row per file: commit id,
     path, row count) is the snapshot manifest — bounded metadata, like
     the range-clustered manifest above."""
-    key = os.path.abspath(sf_dir)
-    if key in _COMMIT_LOG:
-        return _COMMIT_LOG[key]
-    root = scratch_dir("orders_commit_log")
     orders = load(spark, sf_dir, "orders")
     log: list[tuple[int, str, int]] = []
     for commit in range(TT_COMMITS):
-        path = os.path.join(root, f"commit={commit}")
+        path = os.path.join(out, f"commit={commit}")
         part = orders.filter(F.col("o_orderkey") % TT_COMMITS == commit)
         part.write.mode("overwrite").parquet(path)
         log.append((commit, path, part.count()))
-    _COMMIT_LOG[key] = log
     return log
 
 
@@ -365,11 +354,10 @@ def q_maintenance_shard_balance(spark, sf_dir: str) -> DataFrame:
 VACUUM_TRACKED_FILES = 4
 _ORPHAN_MODS = (997, 991)
 
-#: Memoized vacuum directory per sf_dir: (dir, tracked basenames).
-_VACUUM_STAGED: dict[str, tuple[str, list[str]]] = {}
-
-
-def stage_vacuum_dir(spark: SparkSession, sf_dir: str) -> tuple[str, list[str]]:
+@staged_files
+def stage_vacuum_dir(
+    spark: SparkSession, sf_dir: str, *, out: str
+) -> tuple[str, list[str]]:
     """Stage a lake-table directory containing BOTH manifest-tracked
     files (orders range-clustered into VACUUM_TRACKED_FILES parts,
     snapshotted as the manifest the moment they land) and two orphan
@@ -377,20 +365,11 @@ def stage_vacuum_dir(spark: SparkSession, sf_dir: str) -> tuple[str, list[str]]:
     real Spark write of a deterministic orders slice whose part-file
     is then moved into the table directory WITHOUT a manifest entry —
     exactly how a task retried after manifest commit, or a killed
-    compaction, strands files in production lakes."""
-    key = os.path.abspath(sf_dir)
-    if key in _VACUUM_STAGED:
-        return _VACUUM_STAGED[key]
+    compaction, strands files in production lakes. Returns (out,
+    tracked basenames)."""
     import glob
-    import hashlib
     import shutil
 
-    # Scratch name derived from the sf_dir key: a second sf_dir staged
-    # in the same process must get its OWN directory — a shared name
-    # would wipe the first staging while its memo entry still points
-    # there, misclassifying every file as an orphan on the next run.
-    suffix = hashlib.sha1(key.encode()).hexdigest()[:10]
-    out = scratch_dir(f"vacuum_orders_{suffix}")
     (
         load(spark, sf_dir, "orders")
         .repartitionByRange(VACUUM_TRACKED_FILES, "o_orderkey")
@@ -412,7 +391,6 @@ def stage_vacuum_dir(spark: SparkSession, sf_dir: str) -> tuple[str, list[str]]:
         part = glob.glob(os.path.join(tmp, "*.parquet"))[0]
         shutil.move(part, os.path.join(out, f"orphan-{i}.parquet"))
         shutil.rmtree(tmp, ignore_errors=True)
-    _VACUUM_STAGED[key] = (out, tracked)
     return out, tracked
 
 

@@ -49,7 +49,7 @@ def staged_daily_revenue(spark, sf_dir: str) -> DataFrame:
     runs test, ...). Each query previously re-ran the corpus-sized
     day aggregation; staged once per (app, sf_dir) it is ONE corpus
     shuffle for the whole family (same discipline as the dedup/IR
-    staging — see staging.app_staged). v stays DECIMAL(18,2)
+    staging — see staging.staged_frame). v stays DECIMAL(18,2)
     (_rev_sum_dec) so every consumer's exactness contract is
     unchanged."""
 

@@ -34,22 +34,57 @@ def _scratch_dir() -> str:
 #: TaskMemoryManager.PAGE_TABLE_SIZE: the most pages one task can hold.
 PAGE_TABLE_SIZE = 8192
 
+#: On a local master the driver's young generation is a fixed
+#: 1/(LOCAL_NEW_RATIO + 1) of its heap: 512 MiB of the default 8g.
+LOCAL_NEW_RATIO = 15
+
 _SIZE_UNITS = {"": 1 << 20, "b": 1, "k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
 
 
-def local_page_size(master: str, driver_memory: str) -> int | None:
-    """`spark.buffer.pageSize` in bytes for a local master: the smallest
-    power of two with which PAGE_TABLE_SIZE pages address the whole
-    driver heap (`driver_memory` in Spark's syntax, a bare number being
-    MiB). None for any other master: its executors' heaps are not known
-    here, and Spark's own per-executor rule applies."""
+def _local_heap_bytes(master: str, driver_memory: str) -> int | None:
+    """The driver heap in bytes on a local master (`driver_memory` in
+    Spark's syntax, a bare number being MiB), None on any other."""
     if not re.fullmatch(r"local(\[.*\])?", master):
         return None
     m = re.fullmatch(r"(\d+)([bkmgt]?)b?", driver_memory.strip().lower())
     if m is None:
         raise ValueError(f"unparseable spark.driver.memory {driver_memory!r}")
-    heap = int(m.group(1)) * _SIZE_UNITS[m.group(2)]
+    return int(m.group(1)) * _SIZE_UNITS[m.group(2)]
+
+
+def local_page_size(master: str, driver_memory: str) -> int | None:
+    """`spark.buffer.pageSize` in bytes for a local master: the smallest
+    power of two with which PAGE_TABLE_SIZE pages address the whole
+    driver heap. None for any other master: its executors' heaps are not
+    known here, and Spark's own per-executor rule applies."""
+    heap = _local_heap_bytes(master, driver_memory)
+    if heap is None:
+        return None
     return 1 << (-(-heap // PAGE_TABLE_SIZE) - 1).bit_length()
+
+
+def local_heap_options(master: str, driver_memory: str) -> str:
+    """Driver JVM options for a local master: the whole heap committed
+    from the start (`-Xms` equal to the `-Xmx` that spark.driver.memory
+    sets) and a young generation fixed at 1/(LOCAL_NEW_RATIO + 1) of it.
+    Empty for any other master.
+
+    G1 grows a heap that is below its maximum whenever collections come
+    close together, and new eden regions are then taken from the newly
+    committed memory, so the driver's resident size depends on GC timing:
+    the first case mapping in a JVM (Spark's ICU title-case table, about
+    3.4 GB of short-lived garbage) lands on a different heap size from
+    run to run. With the heap at its maximum and eden a fixed size, the
+    young generation reuses the same regions, and the resident size
+    follows the workload alone. Committed but untouched heap costs no
+    resident memory; on a machine with less physical memory than the
+    heap, where the kernel may refuse to commit it, `-Xms` is left out."""
+    heap = _local_heap_bytes(master, driver_memory)
+    if heap is None:
+        return ""
+    physical = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    xms = f"-Xms{heap} " if heap <= physical else ""
+    return f"{xms}-XX:NewRatio={LOCAL_NEW_RATIO}"
 
 
 def get_spark(
@@ -78,8 +113,15 @@ def get_spark(
       there, so every sort or aggregate task allocates and zeroes at
       least one 64 MiB page however few rows it holds, and on an 8 GiB
       heap (4 MiB G1 regions) each such page is a humongous old-gen
-      object. Other masters get no page size: the conf would reach
-      executors whose heaps are not known here.
+      object. Broadcast pieces (`spark.broadcast.blockSize`, 4 MiB by
+      default) get the same size: every broadcast, however small,
+      serializes into at least one piece-sized buffer. Other masters
+      get neither: the conf would reach executors whose heaps are not
+      known here.
+    - On a local master the driver heap is also committed in full and
+      its young generation fixed (`local_heap_options`), so the
+      driver's resident size does not depend on when G1 decides to
+      grow the heap.
 
     In a process that already has an active session, that session is
     returned as it is: none of the arguments is applied to it (pyspark's
@@ -101,10 +143,13 @@ def get_spark(
     driver_memory = extra_conf.get(
         "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g")
     )
-    derby_java_options = (
+    java_options = (
         f"-Dderby.system.home={_scratch_dir()} "
         f"-Dderby.stream.error.file={os.path.join(_scratch_dir(), 'derby.log')}"
     )
+    heap_options = local_heap_options(master, driver_memory)
+    if heap_options:
+        java_options = f"{java_options} {heap_options}"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -133,7 +178,7 @@ def get_spark(
         # driver JVM; harmless for the repo since every entry point here
         # builds its session through this factory first.
         .config("spark.sql.warehouse.dir", os.path.join(_scratch_dir(), "spark-warehouse"))
-        .config("spark.driver.extraJavaOptions", derby_java_options)
+        .config("spark.driver.extraJavaOptions", java_options)
         # Arrow Python workers do not inherit the driver's sys.path:
         # without this, a query with a Python worker fails with
         # ModuleNotFoundError when run outside the repo root.
@@ -141,12 +186,15 @@ def get_spark(
     )
     page = local_page_size(master, driver_memory)
     if page is not None:
-        builder = builder.config("spark.buffer.pageSize", str(page))
+        builder = builder.config("spark.buffer.pageSize", str(page)).config(
+            "spark.broadcast.blockSize", f"{page >> 10}k"
+        )
     for k, v in extra_conf.items():
         # merge, don't clobber: a caller-supplied extraJavaOptions
-        # would otherwise silently drop the Derby flags above
+        # would otherwise silently drop the Derby and heap flags above
+        # (the caller's come last, so theirs win)
         if k == "spark.driver.extraJavaOptions":
-            v = f"{derby_java_options} {v}"
+            v = f"{java_options} {v}"
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -18,24 +18,19 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from job_market_research_spark.io import load
 from job_market_research_spark.registry import query
-from job_market_research_spark.sources.readers import scratch_dir
+from job_market_research_spark.staging import staged_files
 
 #: How many documents become staged raw files.
 BINFILE_N = 20
 
-_STAGED: dict[str, str] = {}
 
-
-def stage_raw_files(spark: SparkSession, sf_dir: str) -> str:
+@staged_files
+def stage_raw_files(spark: SparkSession, sf_dir: str, *, out: str) -> str:
     """Write the first BINFILE_N documents as individual .txt files
     (ASCII corpus → byte length == char length, and file md5 == text
-    md5). Memoized per sf_dir; staging is driver-side but bounded at
-    BINFILE_N files — at scale the files already exist, this only
-    simulates the landing directory."""
-    key = os.path.abspath(sf_dir)
-    if key in _STAGED:
-        return _STAGED[key]
-    out = scratch_dir("binaryfile_landing")
+    md5). Staging is driver-side but bounded at BINFILE_N files — at
+    scale the files already exist, this only simulates the landing
+    directory."""
     rows = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < BINFILE_N)
@@ -45,7 +40,6 @@ def stage_raw_files(spark: SparkSession, sf_dir: str) -> str:
     for r in rows:
         with open(os.path.join(out, f"doc_{r['doc_id']:05d}.txt"), "w") as f:
             f.write(r["text"])
-    _STAGED[key] = out
     return out
 
 
@@ -88,18 +82,11 @@ def q_scan_binaryfile_source(spark, sf_dir: str) -> DataFrame:
     )
 
 
-#: CSV-roundtrip staging (memoized per sf_dir).
-_CSV_STAGED: dict[str, str] = {}
-
-
-def stage_dirty_csv(spark: SparkSession, sf_dir: str) -> str:
+@staged_files
+def stage_dirty_csv(spark: SparkSession, sf_dir: str, *, out: str) -> str:
     """Write a CSV whose text field carries every classic CSV hazard —
     commas, double quotes, embedded newlines, leading/trailing spaces
     — seeded deterministically from the documents table."""
-    key = os.path.abspath(sf_dir)
-    if key in _CSV_STAGED:
-        return _CSV_STAGED[key]
-    out = scratch_dir("csv_dirty_roundtrip")
     dirty = (
         load(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 100)
@@ -125,7 +112,6 @@ def stage_dirty_csv(spark: SparkSession, sf_dir: str) -> str:
         .option("ignoreTrailingWhiteSpace", "false")
         .csv(out)
     )
-    _CSV_STAGED[key] = out
     return out
 
 
@@ -170,16 +156,9 @@ def q_sink_csv_escape_roundtrip(spark, sf_dir: str) -> DataFrame:
     )
 
 
-#: Hive-layout staging for partition-type discovery.
-_HIVE_STAGED: dict[str, str] = {}
-
-
-def stage_hive_partitions(spark: SparkSession, sf_dir: str) -> str:
+@staged_files
+def stage_hive_partitions(spark: SparkSession, sf_dir: str, *, out: str) -> str:
     """Write orders under year=YYYY/month=M hive directories."""
-    key = os.path.abspath(sf_dir)
-    if key in _HIVE_STAGED:
-        return _HIVE_STAGED[key]
-    out = scratch_dir("hive_partitioned_orders")
     (
         load(spark, sf_dir, "orders")
         .select(
@@ -192,7 +171,6 @@ def stage_hive_partitions(spark: SparkSession, sf_dir: str) -> str:
         .partitionBy("year", "month")
         .parquet(out)
     )
-    _HIVE_STAGED[key] = out
     return out
 
 

@@ -57,7 +57,7 @@ def q_stream_bitmap_distinct(spark, sf_dir: str) -> DataFrame:
     hash-proves. State: ≤ |id-domain|/32 words per type per batch; a
     continuous deployment compacts the store with the same OR-merge,
     or keys it in the state store directly."""
-    src = _stage_events(spark, sf_dir, "stream_bitmap")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     root = scratch_dir("stream_bitmap_state")
     state = os.path.join(root, "words")
@@ -149,7 +149,7 @@ def q_stream_welch_monitor(spark, sf_dir: str) -> DataFrame:
 
     from job_market_research_spark.streaming.windows import _stage_events
 
-    src = _stage_events(spark, sf_dir, "stream_welch")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     root = scratch_dir("stream_welch_state")
     state = _os.path.join(root, "moments")
@@ -273,7 +273,7 @@ def q_stream_cms_topk(spark, sf_dir: str) -> DataFrame:
     batch size — the whole point of sketching the stream. At 100 TB/
     day the grid never shuffles more than 256 rows per micro-batch;
     the candidate probe stays a broadcast join against the grid."""
-    src = _stage_events(spark, sf_dir, "stream_cms")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     root = scratch_dir("stream_cms_state")
     state = os.path.join(root, "grid")
@@ -400,7 +400,7 @@ def q_stream_histogram_quantile(spark, sf_dir: str) -> DataFrame:
     State per batch: ≤ HQ_BINS rows, constant in batch size; the
     quantile scan is a cumulative over 64 rows (bounded window —
     allowlisted)."""
-    src = _stage_events(spark, sf_dir, "stream_hq")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     root = scratch_dir("stream_hq_state")
     state = os.path.join(root, "bins")

@@ -23,36 +23,23 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from job_market_research_spark.io import load
 from job_market_research_spark.registry import query
 from job_market_research_spark.sources.readers import scratch_dir
+from job_market_research_spark.staging import staged_files
 
 
-#: Memoized staging dirs per (sf_dir, parts, cols): the arrival
-#: directory is pure function of its inputs, and five streaming
-#: queries used to EACH rewrite the full events table to a private
-#: dir — one write per (shape) per session is enough. The file-source
-#: readers never mutate the staged files, and every query drains with
-#: its own checkpoint, so sharing the source dir is safe.
-_STAGED: dict[tuple, str] = {}
-
-
-def _sf_slug(sf_dir: str) -> str:
-    """Filesystem-safe token unique per sf_dir for scratch-path names
-    (memo keys already include the abspath; the PATH must too — see
-    `_stage_events`)."""
-    import hashlib
-
-    return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-
-
+@staged_files
 def _stage_events(
     spark: SparkSession,
     sf_dir: str,
-    name: str | None = None,
     parts: int = 2,
     cols: tuple[str, ...] | None = None,
+    *,
+    out: str,
 ) -> str:
     """Write events as `parts` parquet files — the simulated arrivals.
-    Memoized per (sf_dir, parts, cols); `name` is ignored (kept for
-    caller readability).
+    The arrival directory is a pure function of (sf_dir, parts, cols),
+    so the streaming queries share one write per shape per process: the
+    file-source readers never mutate the staged files, and every query
+    drains with its own checkpoint.
 
     Default is TWO arrival files (round 10): every multi-batch
     invariance demo (sketch merges, watermark dedup, stateful folds)
@@ -61,28 +48,26 @@ def _stage_events(
     maxFilesPerTrigger=1 drains with no added semantic coverage —
     r9's stream_stream_join sweep measured the per-batch cost directly.
     stream_stateful_counter keeps its own parts=3 (its contract states
-    >= 3 emissions per user).
-
-    The scratch path must encode EVERY memo-key component including
-    sf_dir: scratch_dir(fresh=True) wipes same-named dirs, so a shared
-    name would let a second scale factor silently restage the directory
-    a first scale factor's memo entry still points at (the entry stays
-    isdir-valid but holds the wrong corpus)."""
-    key = (os.path.abspath(sf_dir), parts, cols)
-    cached = _STAGED.get(key)
-    if cached and os.path.isdir(cached):
-        return cached
-    suffix = (
-        f"p{parts}"
-        + ("" if not cols else "_" + "_".join(cols))
-        + "_" + _sf_slug(sf_dir)
-    )
-    out = scratch_dir(f"stream_stage_{suffix}")
+    >= 3 emissions per user)."""
     df = load(spark, sf_dir, "events")
     if cols:
         df = df.select(*cols)
     df.repartition(parts, "event_id").write.mode("overwrite").parquet(out)
-    _STAGED[key] = out
+    return out
+
+
+@staged_files
+def _stage_dedup_arrivals(spark: SparkSession, sf_dir: str, *, out: str) -> str:
+    """Stage the event set twice (2 + 3 arrival files under `out`), so
+    every event_id arrives duplicated. Only the three columns the dedup
+    drain touches are written."""
+    ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts")
+    ev.repartition(2, "event_id").write.mode("overwrite").parquet(
+        os.path.join(out, "arrival_1")
+    )
+    ev.repartition(3, "event_id").write.mode("overwrite").parquet(
+        os.path.join(out, "arrival_2")
+    )
     return out
 
 
@@ -140,7 +125,7 @@ def q_stream_window_tumbling(spark, sf_dir: str) -> DataFrame:
     aligned windows per event_type, 10-minute watermark bounding state.
     Complete output mode so the one-shot drain emits every window (the
     watermark still limits state at a real continuous scale)."""
-    src = _stage_events(spark, sf_dir, "stream_tumbling")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     stream = spark.readStream.schema(schema).parquet(src)
     agg = (
@@ -169,7 +154,7 @@ def q_stream_window_tumbling(spark, sf_dir: str) -> DataFrame:
 def q_stream_window_sliding(spark, sf_dir: str) -> DataFrame:
     """Sliding-window counts (10-minute window, 5-minute slide): each
     event lands in exactly window/slide = 2 overlapping windows."""
-    src = _stage_events(spark, sf_dir, "stream_sliding")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     stream = spark.readStream.schema(schema).parquet(src)
     agg = (
@@ -202,21 +187,11 @@ def q_stream_dedup_watermark(spark, sf_dir: str) -> DataFrame:
     Drain cost: only the three columns the operator touches are staged
     (event_id dedup key, ts watermark, event_type output) — the state
     rows, arrival files and memory sink never carry the payload columns
-    — and the double-arrival staging is memoized per sf_dir like every
-    other arrival directory (it is a pure function of its input; the
-    r9 shape re-wrote both arrivals on every call)."""
+    — and the double-arrival staging is staged once per dataset like
+    every other arrival directory (the r9 shape re-wrote both arrivals
+    on every call)."""
     ev = load(spark, sf_dir, "events").select("event_id", "event_type", "ts")
-    key = (os.path.abspath(sf_dir), "dedup2x")
-    out = _STAGED.get(key)
-    if not (out and os.path.isdir(out)):
-        out = scratch_dir(f"stream_dedup_{_sf_slug(sf_dir)}")
-        ev.repartition(2, "event_id").write.mode("overwrite").parquet(
-            os.path.join(out, "arrival_1")
-        )
-        ev.repartition(3, "event_id").write.mode("overwrite").parquet(
-            os.path.join(out, "arrival_2")
-        )
-        _STAGED[key] = out
+    out = _stage_dedup_arrivals(spark, sf_dir)
     stream = spark.readStream.schema(ev.schema).option("pathGlobFilter", "*.parquet").parquet(
         out + "/arrival_*"
     )
@@ -302,7 +277,7 @@ def q_stream_static_join(spark, sf_dir: str) -> DataFrame:
     are picked up per batch on a real deployment). The drained result
     equals the pure-batch join — the invariant that makes streaming
     enrichment trustworthy."""
-    src = _stage_events(spark, sf_dir, "stream_static_join")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     stream = spark.readStream.schema(schema).parquet(src)
     customer = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -464,7 +439,7 @@ def q_stream_stream_join(spark, sf_dir: str) -> DataFrame:
     side's join state so it is GC-able at scale. Drained in one
     availableNow batch (the whole staged set), the emitted matches
     equal the batch interval join exactly."""
-    src = _stage_events(spark, sf_dir, "stream_stream_join")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     a = (
         spark.readStream.schema(schema)
@@ -547,7 +522,7 @@ def q_stream_kmv_distinct(spark, sf_dir: str) -> DataFrame:
     on the same cut, or holds it in the state store keyed by type."""
     from job_market_research_spark.ml.neardup import portable_hash60
 
-    src = _stage_events(spark, sf_dir, "stream_kmv")
+    src = _stage_events(spark, sf_dir)
     schema = load(spark, sf_dir, "events").schema
     root = scratch_dir("stream_kmv_state")
     state = os.path.join(root, "sketch")

@@ -5,7 +5,7 @@ running anything.
 
 For each registry entry the query is BUILT (not executed — streaming
 drains and staged sinks that run inside the builder are flagged) at the
-smoke scale factor and its executed-plan string is summarized: scans,
+smoke scale factor and its executed-plan tree is summarized: scans,
 exchanges, join strategies, window count, WindowGroupLimit pushdown,
 and the Python boundary (Arrow-batched only — BatchEvalPython is
 banned by tests/test_plan_hygiene.py; this census records the same
@@ -25,7 +25,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 from collections import Counter
 
@@ -37,81 +36,8 @@ _JOIN_NODES = (
     "ShuffledHashJoin",
     "BroadcastNestedLoopJoin",
 )
-_PY_NODES = ("MapInPandas", "FlatMapGroupsInPandas", "ArrowEvalPython")
 
-
-def _node_depth(line: str) -> int:
-    """Depth of a node in Spark's tree drawing = column of the first
-    character that isn't tree scaffolding (space/:/+/-)."""
-    m = re.search(r"[^ :+\-]", line)
-    return m.start() if m else len(line)
-
-
-#: Per-reprint noise an EXECUTED cached frame's toString carries that a
-#: fresh print does not (AQE stamps new ids at every reprint): these
-#: must never participate in cached-subtree identity keys, or the same
-#: staged build stops deduping once it has run (r12 verdict: graph_hits
-#: 14 scans pre-execution -> 1482 post-execution in the same app).
-_AQE_REPRINT_NOISE = re.compile(
-    r"plan_id=\d+|\*\(\d+\) ?|\w*QueryStage \d+|isFinalPlan=\w+"
-)
-
-
-def split_cached(plan: str) -> tuple[str, list[str]]:
-    """Separate a plan-tree string into (outer plan, distinct cached
-    subtrees). `toString` reprints every InMemoryRelation's FULL child
-    plan at each reference, so counting nodes on the raw text charges a
-    staged frame once per consumer — but the cached subtree executes
-    ONCE per application (staging.app_staged). Each distinct subtree
-    (keyed with expression ids and AQE reprint stamps stripped) is
-    returned once so summarize can count its build a single time.
-
-    NOTE: this text parser is only reliable for plans whose cached
-    frames have NOT yet executed in this Spark app (the census runs in
-    a fresh app, so PLANS.md is safe). Once a frame executes, its
-    reprint switches to `== Final Plan == / == Initial Plan ==` dual
-    sections at RESET indentation that defeat depth-based subtree
-    extraction. Order-independent callers (the lineage-collapse guard)
-    must use summarize_tree instead, which walks the real plan tree."""
-    subtrees: dict[str, str] = {}
-
-    def strip(text: str) -> str:
-        lines = text.splitlines()
-        kept: list[str] = []
-        i = 0
-        while i < len(lines):
-            ln = lines[i]
-            if "InMemoryRelation" not in ln:
-                kept.append(ln)
-                i += 1
-                continue
-            depth = _node_depth(ln)
-            j = i + 1
-            sub: list[str] = []
-            while j < len(lines) and _node_depth(lines[j]) > depth:
-                sub.append(lines[j])
-                j += 1
-            body = "\n".join(sub)
-            # reprint sites indent the same subtree differently, so the
-            # identity key strips tree scaffolding, expression ids, and
-            # AQE reprint stamps
-            key = _AQE_REPRINT_NOISE.sub(
-                "",
-                re.sub(r"#\d+", "", "\n".join(l.lstrip(" :+-") for l in sub)),
-            )
-            if key not in subtrees:
-                subtrees[key] = ""  # claim before recursing (cycles can't
-                # occur, but a nested re-print of the same stage can)
-                subtrees[key] = strip(body)  # stages built on stages
-            i = j
-        return "\n".join(kept)
-
-    outer = strip(plan)
-    return outer, [s for s in subtrees.values() if s]
-
-
-#: nodeName prefixes counted as source scans — same seven formats the
-#: text census counts via `plan.count("Scan parquet")` etc.
+#: nodeName prefixes counted as source scans.
 _SCAN_PREFIXES = (
     "Scan parquet",
     "Scan csv",
@@ -124,32 +50,26 @@ _SCAN_PREFIXES = (
 
 
 def summarize_tree(df) -> dict:
-    """Order-independent counterpart to summarize(): counts the same
-    facts by walking the executed-plan TREE via py4j instead of parsing
-    toString() text.
+    """Count a query's plan-shape facts by walking its executed-plan
+    TREE via py4j (the toString() text reprints every consumed cached
+    frame's child plan, and once that frame has EXECUTED in the same
+    Spark app the reprint switches to AQE form with per-reprint stamps,
+    so text counts depend on what ran before — r12 verdict: graph_hits
+    14 scans fresh, 1482 after the oracle-parity sweep had run it):
 
-    Why it exists (r12 verdict): toString() reprints every consumed
-    cached frame's child plan, and once that frame has EXECUTED in the
-    same Spark app the reprint switches to AQE form — `== Final Plan ==
-    / == Initial Plan ==` dual sections at reset indentation, plus
-    per-reprint `plan_id=N` / `*(N)` codegen / `ShuffleQueryStage N`
-    stamps — which defeats text keying and made the lineage-collapse
-    guard order-dependent (graph_hits: 14 scans fresh, 1482 after the
-    alphabetically-earlier oracle-parity sweep had run it). The tree
-    has none of those problems:
-
-    - AdaptiveSparkPlan is descended via initialPlan(), the exact
-      subtree the fresh text census prints, identical before and after
-      execution (no QueryStage wrappers, no reuse rewrites);
+    - AdaptiveSparkPlan is descended via initialPlan(), identical
+      before and after execution (no QueryStage wrappers, no reuse
+      rewrites);
     - each distinct cached build is charged ONCE — keyed by its
       CachedRDDBuilder (shared by every InMemoryRelation referencing
-      the same cache entry) — matching its once-per-app execution;
-    - counting is by nodeName(), which emits the very tokens the text
-      census matches ("Scan parquet", "Exchange", "BroadcastHashJoin").
+      the same cache entry) — matching its once-per-app execution,
+      while every InMemoryTableScan reference counts as `staged`;
+    - counting is by nodeName() ("Scan parquet", "Exchange",
+      "BroadcastHashJoin"); `joins` is keyed in `_JOIN_NODES` order.
 
-    Verified count-equal to summarize() for the guarded queries in a
-    fresh app (tests/test_plan_hygiene.py asserts the caps derived from
-    the text census hold under this counter in both contexts)."""
+    The same counter serves PLANS.md, the reroute audit, the isolated
+    profile and the lineage-collapse guard, so their counts agree in
+    any execution order."""
     counts = {
         "staged": 0,
         "scans": 0,
@@ -203,47 +123,16 @@ def summarize_tree(df) -> dict:
             for i in range(children.length()):
                 stack.append(children.apply(i))
             # expression-embedded plans (DPP / scalar subqueries) are
-            # not in children() but ARE printed by toString — traverse
-            # them so the tree count matches the text census
+            # not in children() but do execute — traverse them
             # (ann_index_build's partition-pruning subquery reads the
             # staged index and was invisible to a children()-only walk)
             subqueries = node.subqueries()
             for i in range(subqueries.length()):
                 stack.append(subqueries.apply(i))
-    counts["joins"] = dict(counts["joins"])
+    counts["joins"] = {j: counts["joins"][j] for j in _JOIN_NODES if counts["joins"][j]}
     counts["python"] = sorted(counts["python"])
     counts["banned"] = sorted(counts["banned"])
     return counts
-
-
-def summarize(plan: str) -> dict:
-    outer, cached = split_cached(plan)
-    # the outer plan plus each distinct cached BUILD counted once —
-    # staged references themselves surface as `staged`, INCLUDING
-    # stage-on-stage reads inside a cached build (staged_ws_doclen
-    # reading staged_ws_tcounts, staged_lpa_labels reading staged_und)
-    # so the census's staging graph is complete, not outer-only
-    plan = outer + "\n" + "\n".join(cached)
-    return {
-        "staged": plan.count("InMemoryTableScan"),
-        "scans": plan.count("Scan parquet")
-        + plan.count("Scan csv")
-        + plan.count("Scan orc")
-        + plan.count("Scan json")
-        + plan.count("Scan text")
-        + plan.count("Scan ExistingRDD")
-        + plan.count("Scan binaryFile"),
-        "exchanges": plan.count("Exchange") - plan.count("ReusedExchange"),
-        "joins": {j: plan.count(j) for j in _JOIN_NODES if j in plan},
-        "windows": plan.count("Window "),  # trailing space: not WindowGroupLimit
-        "wgl": "WindowGroupLimit" in plan,
-        "python": [p for p in _PY_NODES if p in plan],
-        "banned": [
-            b
-            for b in ("CartesianProduct", "BatchEvalPython")
-            if b in plan
-        ],
-    }
 
 
 def write_fingerprints(fps: dict[str, str], errored: list[str]) -> list[str]:
@@ -301,8 +190,7 @@ def main() -> None:
         try:
             df = specs[name].fn(spark, sf)
             fp = plan_fingerprint(df, specs[name].oracle, sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
-            s = summarize(plan)
+            s = summarize_tree(df)
         except Exception as exc:  # pragma: no cover — census must finish
             rows.append((name, None, f"ERROR: {exc}"))
             continue
@@ -334,7 +222,7 @@ def main() -> None:
         "nodes (row-at-a-time BatchEvalPython is banned). Queries marked",
         "`*` run real work (streaming drain / staged sink) inside the",
         "builder; their row describes the terminal read. `stg` counts",
-        "references to per-app staged frames (staging.app_staged —",
+        "references to per-app staged frames (staging.staged_frame —",
         "InMemoryTableScan); each staged frame's BUILD subtree is",
         "counted once in scans/exch/joins, matching its once-per-app",
         "execution, not once per reprint in the plan text.",

@@ -32,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from bench import cpu_canary
     from scripts.plan_census import summarize_tree
     from job_market_research_spark.registry import load_all
     from job_market_research_spark.session import get_spark
@@ -50,13 +51,6 @@ def main() -> None:
     specs = load_all()
     spark = get_spark(app_name="profile-isolated")
 
-    def canary() -> float:
-        t0 = time.perf_counter()
-        spark.range(0, 200_000_000, 1, 32).selectExpr(
-            "sum(id % 7) AS s", "count(*) AS n"
-        ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
-
     threads = spark._jvm.java.lang.management.ManagementFactory.getThreadMXBean()
 
     def run(df) -> tuple[float, int]:
@@ -67,8 +61,8 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         return time.perf_counter() - t0, threads.getTotalThreadAllocatedBytes() - a0
 
-    canary()  # codegen warmup
-    c0 = min(canary() for _ in range(2))
+    cpu_canary(spark)  # codegen warmup
+    c0 = min(cpu_canary(spark) for _ in range(2))
     for name in names:
         fn = specs[name].fn
         spark.sparkContext.setJobDescription(f"profile:{name}")
@@ -95,7 +89,7 @@ def main() -> None:
             with open(path, "w") as f:
                 f.write(plan_txt)
             print(f"  wrote {path}")
-    c1 = min(canary() for _ in range(2))
+    c1 = min(cpu_canary(spark) for _ in range(2))
     print(f"canary before {c0:.4f} after {c1:.4f}")
     spark.stop()
 

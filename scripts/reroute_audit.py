@@ -11,7 +11,8 @@ order it could silently reroute.
 
 This audit makes the reroute set explicit: construct every registered
 query (registering every staged frame), then walk all 465 plans and
-diff each plan's staged-read count against the committed PLANS.md.
+diff each plan's staged-read count against the committed PLANS.md,
+counted by the same `plan_census.summarize_tree` that wrote it.
 Builder-runs queries (`registry.BUILDER_RUNS`: streaming drains, sink
 writes) are constructed like every other, so a staged frame owned by
 one of them is registered because the audit watched its builder run.
@@ -32,7 +33,6 @@ Run from the repo root: python scripts/reroute_audit.py [sf_dir]
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import re
 import sys
@@ -52,14 +52,8 @@ def audit(spark, sf: str, root: str) -> list[tuple[str, int, int]]:
     WALK loop forces physical planning (where CacheManager.useCachedData
     substitutes canonically-equal subtrees), EVERY staged frame is
     registered."""
-    spec = importlib.util.spec_from_file_location(
-        "plan_census",
-        os.path.join(root, "scripts", "plan_census.py"),
-    )
-    census = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(census)
-
     from job_market_research_spark.registry import load_all
+    from scripts.plan_census import summarize_tree
 
     specs = load_all()
     dfs = {}
@@ -78,7 +72,7 @@ def audit(spark, sf: str, root: str) -> list[tuple[str, int, int]]:
     changed = []
     for name in sorted(dfs):
         try:
-            s = census.summarize_tree(dfs[name])
+            s = summarize_tree(dfs[name])
         except Exception as exc:
             print(f"ERR {name}: {exc!r}"[:120])
             continue

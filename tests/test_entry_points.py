@@ -5,7 +5,6 @@ started from a foreign working directory."""
 
 from __future__ import annotations
 
-import importlib.util
 import os
 import subprocess
 import sys
@@ -13,17 +12,9 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _sweep_main():
-    spec = importlib.util.spec_from_file_location(
-        "driver_hash_sim", os.path.join(ROOT, "scripts", "driver_hash_sim.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.main
-
-
 def test_oracle_sweep_passes_named_query(spark, sf_dir):
-    main = _sweep_main()
+    from scripts.driver_hash_sim import main
+
     assert main([sf_dir, "--only=join_sector_count"]) == 0
 
 
@@ -48,7 +39,8 @@ def test_oracle_sweep_rejects_bad_only_before_running(sf_dir, monkeypatch, capsy
         raise AssertionError("the sweep started a session")
 
     monkeypatch.setattr(session, "get_spark", no_session)
-    main = _sweep_main()
+    from scripts.driver_hash_sim import main
+
     assert main([sf_dir, "--only=no_such_query"]) != 0
     assert "no_such_query" in capsys.readouterr().err
     # the space-separated form is not the CLI's; it must not run either

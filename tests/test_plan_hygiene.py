@@ -590,11 +590,10 @@ def test_rank_filters_get_window_group_limit(spark, sf_dir):
 #: HEAD) plus slack of 2 — far below each query's pre-staging
 #: blow-up, so losing a stage (or the O(R^2)/O(2^R) unroll coming
 #: back) fails loudly while normal plan drift does not. Counted with
-#: scripts/plan_census.summarize_tree (each distinct cached build
-#: charged once via its shared CachedRDDBuilder, matching its
-#: once-per-app execution) — the TREE walk, not toString() parsing,
-#: because executed cached frames reprint in AQE dual-section form
-#: that defeats text keying and made the r12 guard order-dependent.
+#: scripts/plan_census.summarize_tree, the counter that writes the
+#: PLANS.md rows (each distinct cached build charged once via its
+#: shared CachedRDDBuilder, matching its once-per-app execution), so
+#: the count holds whether or not the staged frames have executed.
 _LINEAGE_SCAN_CAPS = {  # fresh census scans + 2
     "graph_kcore_peel": 8,  # 6
     "graph_bfs_hops": 3,  # 1
@@ -621,33 +620,20 @@ def test_iterative_queries_stay_lineage_collapsed(spark, sf_dir, qname):
     whatever cache state the suite happens to be in (order
     independence), AND after this query has demonstrably executed in
     this very app — the exact condition (oracle-parity sweep first)
-    that broke the r12 text-keyed guard."""
-    import importlib.util
-    import os
-
-    spec = importlib.util.spec_from_file_location(
-        "plan_census",
-        os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-            "scripts",
-            "plan_census.py",
-        ),
-    )
-    census = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(census)
-
+    under which a plan-text count used to drift."""
     from job_market_research_spark.registry import load_all
+    from scripts.plan_census import summarize_tree
 
     fn = load_all()[qname].fn
     cap = _LINEAGE_SCAN_CAPS[qname]
     df = fn(spark, sf_dir)
-    before = census.summarize_tree(df)["scans"]
+    before = summarize_tree(df)["scans"]
     assert before <= cap, (
         f"{qname}: {before} distinct scans (cap {cap}) — a staged "
         "leg was lost or the per-round unroll re-derives its lineage"
     )
     df.count()  # materialize the staged frames: reprints flip to AQE form
-    after = census.summarize_tree(fn(spark, sf_dir))["scans"]
+    after = summarize_tree(fn(spark, sf_dir))["scans"]
     assert after == before, (
         f"{qname}: scan count drifted across execution "
         f"({before} fresh -> {after} post-exec) — the cached-build "
@@ -695,17 +681,12 @@ def test_staged_frames_do_not_silently_reroute_fused_queries(spark, sf_dir):
     staged-read count against PLANS.md.
     Deterministic in any suite cache state, since substitution
     happens at physical-planning time, after all registration."""
-    import importlib.util
     import os
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    spec = importlib.util.spec_from_file_location(
-        "reroute_audit", os.path.join(root, "scripts", "reroute_audit.py")
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
+    from scripts.reroute_audit import audit
 
-    changed = mod.audit(spark, sf_dir, root)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    changed = audit(spark, sf_dir, root)
     rogue = [
         (n, ref, cur)
         for n, ref, cur in changed

@@ -91,39 +91,63 @@ def test_vacuum_orphans_bookkeeping(spark, sf_dir, rows):
     assert r["n_orphans"] == 2 and r["orphan_rows"] > 0
 
 
-def test_vacuum_staging_isolated_per_sf_dir(spark, sf_dir):
-    """ADVICE r11: staging a SECOND sf_dir in the same process must not
-    wipe the first's directory out from under its memo entry — each
-    sf_dir gets its own scratch path and the first's files survive."""
+#: Every registered query that reads files a `staging.staged_files`
+#: stage wrote from its dataset.
+FILE_STAGING_QUERIES = (
+    "scan_binaryfile_source",
+    "sink_csv_escape_roundtrip",
+    "scan_hive_partition_types",
+    "maintenance_manifest_prune",
+    "scan_manifest_time_travel",
+    "maintenance_vacuum_orphans",
+    "stream_window_tumbling",
+    "stream_window_sliding",
+    "stream_dedup_watermark",
+    "stream_static_join",
+    "stream_stream_join",
+    "stream_kmv_distinct",
+    "stream_sessionize",
+    "stream_stateful_counter",
+    "stream_bitmap_distinct",
+    "stream_welch_monitor",
+    "stream_cms_topk",
+    "stream_histogram_quantile",
+)
+
+
+@pytest.fixture(scope="module")
+def sibling_sf_dir(sf_dir):
+    """A testdata dataset other than the one under test — hardcoding
+    sf0.01 breaks when SPARK_GRAFT_TEST_SF itself points there (the two
+    stagings would share one key) or when the sibling is absent on this
+    machine."""
     import os
 
-    from job_market_research_spark.operators.manifest import stage_vacuum_dir
-
-    import pytest
-
-    out1, tracked1 = stage_vacuum_dir(spark, sf_dir)
-    # pick a sibling dataset that is not the one under test — hardcoding
-    # sf0.01 breaks when SPARK_GRAFT_TEST_SF itself points there (the
-    # two stagings would share a memo entry) or when the sibling is
-    # absent on this machine.
     root = os.path.dirname(os.path.abspath(sf_dir))
     others = [
         os.path.join(root, d)
         for d in sorted(os.listdir(root))
         if d.startswith("sf")
-        and os.path.join(root, d) != os.path.abspath(sf_dir)
+        and os.path.realpath(os.path.join(root, d)) != os.path.realpath(sf_dir)
         and os.path.exists(os.path.join(root, d, "orders.parquet"))
     ]
     if not others:
         pytest.skip("no sibling sf dataset available for isolation check")
-    other = others[0]
-    out2, _ = stage_vacuum_dir(spark, other)
-    assert out1 != out2
-    listed = sorted(os.listdir(out1))
-    for name in tracked1:
-        assert name in listed, "first staging was clobbered by the second"
-    # memoized re-entry still points at the intact first directory
-    assert stage_vacuum_dir(spark, sf_dir) == (out1, tracked1)
+    return others[0]
+
+
+@pytest.mark.parametrize("name", FILE_STAGING_QUERIES)
+def test_file_staging_isolated_per_sf_dir(spark, sf_dir, duck, sibling_sf_dir, name):
+    """Staging a SECOND dataset in the same process must not overwrite
+    the first one's staged files: build the query at sf_dir (staging
+    its files), build it at the sibling (staging the sibling's), then
+    the sf_dir build must still match the sf_dir oracle."""
+    from tests.oracle_utils import assert_parity
+
+    fn = SPECS[name].fn
+    fn(spark, sf_dir)
+    fn(spark, sibling_sf_dir)
+    assert_parity(fn(spark, sf_dir), duck, SPECS[name].oracle, name=name, sf_dir=sf_dir)
 
 
 def test_webp_meta_within_variant_caps(spark, sf_dir, rows):

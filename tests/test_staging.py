@@ -1,6 +1,7 @@
-"""staging.app_staged memo semantics: per-(app, key) identity, build
-laziness, and dead-app eviction — tested with stub frames (no Spark
-needed for the memo logic) plus one live identity check."""
+"""staging memo semantics: per-(app, key) frame identity, extra key
+parts, dead-app eviction, and file stages re-staged when their
+directory is gone — tested with stub frames (no Spark needed for the
+memo logic) plus live identity and value checks."""
 
 from __future__ import annotations
 
@@ -47,19 +48,61 @@ def test_same_key_returns_same_persisted_frame(monkeypatch):
         builds.append(f)
         return f
 
-    a = staging.app_staged(spark, ("x", "/sf"), build)
-    b = staging.app_staged(spark, ("x", "/sf"), build)
+    a = staging.staged_frame(spark, "x", "/sf", build)
+    b = staging.staged_frame(spark, "x", "/sf", build)
     assert a is b and a.persisted
     assert len(builds) == 1, "memo hit must not rebuild"
-    c = staging.app_staged(spark, ("x", "/other"), build)
-    assert c is not a and len(builds) == 2, "key includes parameters"
+    c = staging.staged_frame(spark, "x", "/other", build)
+    assert c is not a and len(builds) == 2, "key includes the dataset"
+
+
+def test_extra_key_parts_give_distinct_entries(monkeypatch):
+    cache = _fresh_cache(monkeypatch)
+    spark = _FakeSpark("app-1")
+    r1 = staging.staged_frame(spark, "x", "/sf", _FakeFrame, 1)
+    r2 = staging.staged_frame(spark, "x", "/sf", _FakeFrame, 2)
+    bare = staging.staged_frame(spark, "x", "/sf", _FakeFrame)
+    assert len({id(r1), id(r2), id(bare)}) == 3
+    assert staging.staged_frame(spark, "x", "/sf", _FakeFrame, 1) is r1
+    assert set(cache) == {
+        ("app-1", "x", "/sf", 1),
+        ("app-1", "x", "/sf", 2),
+        ("app-1", "x", "/sf"),
+    }
+
+
+def test_deleted_staged_directory_is_restaged(monkeypatch, tmp_path):
+    import shutil
+
+    monkeypatch.setattr(staging, "_FILE_CACHE", {})
+    runs = []
+
+    @staging.staged_files
+    def stage_marker(spark, sf_dir, width=3, *, out):
+        with open(os.path.join(out, "marker"), "w") as f:
+            f.write(f"{sf_dir}:{width}")
+        runs.append(out)
+        return out
+
+    sf = str(tmp_path / "sf")
+    out = stage_marker(None, sf)
+    assert stage_marker(None, sf, 3) == out and stage_marker(None, sf, width=3) == out
+    assert len(runs) == 1, "defaulted, positional and keyword calls share one entry"
+    other = stage_marker(None, sf, 4)
+    assert other != out and len(runs) == 2, "parameters get their own directory"
+    shutil.rmtree(out)
+    assert stage_marker(None, sf) == out and len(runs) == 3
+    with open(os.path.join(out, "marker")) as f:
+        assert f.read() == f"{sf}:3"
+    shutil.rmtree(out)
+    shutil.rmtree(other)
 
 
 def test_dead_app_entries_are_unpersisted_and_dropped(monkeypatch):
     cache = _fresh_cache(monkeypatch)
-    old = staging.app_staged(_FakeSpark("app-old"), ("x", "/sf"), _FakeFrame)
+    old = staging.staged_frame(_FakeSpark("app-old"), "x", "/sf", _FakeFrame)
     assert ("app-old", "x", "/sf") in cache
-    new = staging.app_staged(_FakeSpark("app-new"), ("x", "/sf"), _FakeFrame)
+    new = staging.staged_frame(_FakeSpark("app-new"), "x", "/sf", _FakeFrame)
     assert old.unpersisted, "stopped app's blocks must be released"
     assert ("app-old", "x", "/sf") not in cache
     assert new is not old
@@ -72,8 +115,8 @@ def test_unpersist_failure_still_evicts(monkeypatch):
         def unpersist(self):
             raise RuntimeError("context stopped")
 
-    staging.app_staged(_FakeSpark("app-old"), ("x", "/sf"), _Broken)
-    staging.app_staged(_FakeSpark("app-new"), ("x", "/sf"), _FakeFrame)
+    staging.staged_frame(_FakeSpark("app-old"), "x", "/sf", _Broken)
+    staging.staged_frame(_FakeSpark("app-new"), "x", "/sf", _FakeFrame)
     assert ("app-old", "x", "/sf") not in cache
 
 
@@ -126,6 +169,9 @@ def test_live_staged_frames_are_identical_across_calls(spark, sf_dir):
 
     for fn in (staged_ws_tcounts, staged_shingles, staged_embeddings):
         assert fn(spark, sf_dir) is fn(spark, sf_dir)
+    # the shingle width is the one extra key part of the dedup family's leg
+    app = spark.sparkContext.applicationId
+    assert (app, "shingles", os.path.realpath(sf_dir), 3) in staging._STAGE_CACHE
 
 
 def test_round12_staged_frames_value_equal_inline(spark, sf_dir):
